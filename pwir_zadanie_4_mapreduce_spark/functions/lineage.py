@@ -54,9 +54,16 @@ def _ensure_checkpoint_dir(df: DataFrame) -> None:
 
 def cut_lineage(df: DataFrame, eager: bool = False) -> DataFrame:
     """Truncate ``df``'s lineage: localCheckpoint by default, reliable
-    ``checkpoint()`` when SPARK_GRAFT_RELIABLE_CHECKPOINT=1. Lazy by
-    default (materializes on first use, like the call sites' previous
-    ``localCheckpoint(eager=False)`` spelling)."""
+    ``checkpoint()`` when SPARK_GRAFT_RELIABLE_CHECKPOINT=1.
+
+    ``eager=False`` (the default) defers the count job, but the cut is
+    lazy only over a narrow plan. The cut plans ``df`` physically on
+    the spot, and under AQE that runs every shuffle-map stage of the
+    plan before this returns; only the stage after the last exchange
+    waits for the first action. That action fills the local blocks as
+    it computes them. A reliable ``checkpoint()`` writes its files in
+    a second job once that action finishes, recomputing the cut frame
+    from its last exchange (or its scan)."""
     if reliable_checkpoints_enabled():
         _ensure_checkpoint_dir(df)
         return df.checkpoint(eager=eager)

@@ -59,22 +59,30 @@ def _persisted_rdd_ids(sc) -> set[int]:
     return {int(k) for k in jmap.keySet().toArray()}
 
 
-def checkpoint_tracked(df: DataFrame) -> tuple[DataFrame, set[int]]:
+def checkpoint_tracked(df: DataFrame, eager: bool = True) -> tuple[DataFrame, set[int]]:
     """``localCheckpoint`` plus the IDs of the RDDs it persisted, so the
     chunk loop can free the PREVIOUS chunk's grid once the next one has
     materialized. Without this, storage grows by one N×N grid per chunk
     within a single solve (~0.5 GB/chunk at N=8192) — a solve must hold
     exactly one live grid, like the reference's two malloc'd buffers
-    (laplace-seq.c:166-170)."""
+    (laplace-seq.c:166-170).
+
+    ``eager=True`` materializes the cut on return (one count job).
+    ``eager=False`` only marks it: the RDD is registered for storage
+    at once, so the returned IDs are the same, but its blocks are
+    filled by the first action that reads every partition — the caller
+    must run that action before releasing the frame the cut reads
+    from. Under AQE a lazy cut over a plan with an exchange still runs
+    the shuffle-map stage at call time (see functions/lineage.py)."""
     from pwir_zadanie_4_mapreduce_spark.functions.lineage import cut_lineage
 
     sc = df.sparkSession.sparkContext
     before = _persisted_rdd_ids(sc)
-    # eager: materialized on return. Reliable mode (see functions/
-    # lineage.py) writes checkpoint FILES instead of blocks — the id
-    # diff is then empty and per-chunk cleanup is the checkpoint dir's
-    # (old grids cost disk, not executor memory).
-    out = cut_lineage(df, eager=True)
+    # Reliable mode (see functions/lineage.py) writes checkpoint FILES
+    # instead of blocks — the id diff is then empty and per-chunk
+    # cleanup is the checkpoint dir's (old grids cost disk, not
+    # executor memory).
+    out = cut_lineage(df, eager=eager)
     return out, _persisted_rdd_ids(sc) - before
 
 
@@ -223,7 +231,12 @@ class LaplaceResult:
     # Cumulative wall time of the per-chunk max-diff reduction actions
     # — the analog of the reference's `breakdown` accumulator, which
     # sums the time the parallel program spends in MPI exchange/reduce
-    # (laplace-par.c:177,391-392, printed at :541).
+    # (laplace-par.c:177,391-392, printed at :541). In ``solve`` the
+    # chunk is already materialized, so this is the reduce alone. In
+    # ``laplace_blocked.solve_blocked`` the timed collect is also the
+    # job that computes the chunk (it fills the chunk's lazy cut), so
+    # it includes the sweeps themselves — everything but the halo
+    # exchange's shuffle-map job, which runs when the cut is made.
     breakdown_s: float = 0.0
 
 

@@ -15,10 +15,13 @@ blocking* optimization to the Spark execution model:
 - a *chunk* of ``k`` sweeps ships each block its rows plus a
   ``2k``-row halo on each side (one red-black sweep has data
   dependency radius 2: phase 1 reads phase 0's values one row away,
-  which read rows two away), via a single explode → hash shuffle on a
-  remapped key precomputed so each block lands in its own partition;
+  which read rows two away), via a single explode → hash shuffle into
+  exactly ``nb`` partitions on a remapped key precomputed so each
+  block lands in its own partition — one Python task per block, none
+  empty. With one block there is no halo to ship and no shuffle: the
+  chunk is a narrow map over the one-partition grid;
 - each block then runs all ``k`` sweeps locally in vectorized numpy
-  inside ``mapInPandas`` — zero communication for k sweeps. Halo
+  inside ``mapInArrow`` — zero communication for k sweeps. Halo
   rows go stale one dependency-radius per sweep, but the owned rows
   sit ``>= 2k`` rows from any missing edge, so after k sweeps every
   owned row is *exactly* the value the sequential program computes;
@@ -26,7 +29,10 @@ blocking* optimization to the Spark execution model:
   laplace-par.c:504) falls out for free: each phase updates a
   disjoint color set, owned cells are valid at every intermediate
   sweep, so the block-local owned-row maxima reduce to the exact
-  global maximum with one tiny agg per chunk.
+  global maximum with one tiny collect per chunk. The chunk's
+  lineage cut is lazy and that collect, which reads every partition,
+  fills it — so a chunk is ONE job (plus the shuffle-map job of the
+  halo exchange when ``nb > 1``), not a cut job and then a collect.
 
 Communication drops from ``2·iters`` shuffles to ``iters/k`` — with
 the fan-out factor ``1 + 4k/rows_per_block`` as the classic ghost-zone
@@ -60,12 +66,14 @@ from .laplace import (
 )
 
 
-def make_grid_rows(spark: SparkSession, n: int) -> DataFrame:
+def make_grid_rows(spark: SparkSession, n: int, num_partitions: int) -> DataFrame:
     """O1 generate source, row-oriented: ``(i, vals[N])`` per grid row
     with the Dirichlet boundaries of laplace-common-impl.h:11-33 (the
     when-chain keeps the C else-if precedence: corners take the row
-    value)."""
-    return spark.range(n).select(
+    value). ``spark.range`` splits the rows into ``num_partitions``
+    contiguous slices — a 1-D row-block decomposition with no
+    exchange."""
+    return spark.range(0, n, 1, num_partitions).select(
         F.col("id").cast("int").alias("i"),
         F.transform(
             F.sequence(F.lit(0), F.lit(n - 1)), lambda jj: cell_expr(jj, n)
@@ -271,10 +279,12 @@ def _chunk_kernel(n: int, omega: float, k: int, rows_per_block: int):
     """Build the mapInArrow kernel for one chunk of ``k`` sweeps.
 
     Each task's partition holds one block (plus halo) by construction —
-    the solver hash-repartitions on a remapped key chosen so every
-    block's Murmur3 partition is distinct (see solve_blocked), unlike
-    hash-groupBy where the birthday paradox routinely co-locates two
-    blocks in one task and doubles the chunk's wall time (measured:
+    a one-block grid is one partition, and otherwise the solver
+    hash-repartitions into one partition per block on a remapped key
+    chosen so every block's Murmur3 partition is distinct (see
+    solve_blocked), unlike hash-groupBy where the birthday paradox
+    routinely co-locates two blocks in one task and doubles the
+    chunk's wall time (measured:
     N=2048 nb=8 on 32 shuffle partitions, 196→115 s after the fix).
     The kernel still loops over the b values it receives, so
     correctness never depends on the 1:1 placement.
@@ -358,6 +368,12 @@ def solve_blocked(
     a minority of each block's payload where the grid allows it; at
     small N this honestly collapses toward one block — the distributed
     path is exercised explicitly in tests via ``num_blocks``.
+
+    Jobs: one eager cut of the initial grid (plus the remap's candidate
+    job when there is more than one block), then per chunk the max-diff
+    collect — plus the halo exchange's shuffle-map job when
+    ``nb > 1`` — and one eager cut for a mid-chunk convergence redo.
+    Every chunk stage runs exactly ``nb`` tasks.
     """
     if n < 2:
         raise ValueError("numPointsPerDimension must be >= 2 (laplace-seq.c:155-161)")
@@ -371,20 +387,24 @@ def solve_blocked(
     rows_per_block = -(-n // num_blocks)  # ceil
     nb = -(-n // rows_per_block)  # effective block count
 
-    # One block per task, deterministically: hash-repartition on a
-    # remapped key chosen (once per solve, one tiny job) so each
-    # block's Murmur3 partition is distinct. groupBy/hash on b itself
-    # loses the birthday lottery routinely (two blocks in one task =
-    # 2× chunk wall time, measured at N=2048 nb=8); repartitionByRange
+    # One block per task, deterministically: hash-repartition into
+    # exactly nb partitions on a remapped key chosen (once per solve,
+    # one tiny job) so each block's Murmur3 partition is distinct —
+    # the remap is then a permutation of the nb partitions, and every
+    # chunk launches nb Python tasks, none of them empty (an empty
+    # Python task still pays the worker's per-task setup, ~0.2 s on a
+    # 4-core host with PySpark 4.1). groupBy/hash on b itself loses
+    # the birthday lottery routinely (two blocks in one task = 2×
+    # chunk wall time, measured at N=2048 nb=8); repartitionByRange
     # fixes placement but adds a boundary-sampling job per chunk and
-    # still co-located blocks at small nb.
-    num_parts = max(nb, int(spark.conf.get("spark.sql.shuffle.partitions", "32")))
+    # still co-located blocks at small nb. With one block the chunk
+    # needs no exchange at all (see run_chunk).
     remap = {b: b for b in range(nb)}
     if nb > 1:
         # Lazily widen the candidate pool: 64 keys per block usually
         # suffice, but if every candidate's Murmur3 partition is taken
-        # we fetch the next 64·nb keys (num_parts >= nb guarantees a
-        # free partition exists; only the candidate-key supply is
+        # we fetch the next 64·nb keys (some partition is always free
+        # while a block is unplaced; only the candidate-key supply is
         # finite) instead of silently co-locating two blocks — the 2×
         # chunk-wall-time failure the remap exists to prevent.
         part_of: dict[int, int] = {}
@@ -392,7 +412,7 @@ def solve_blocked(
         def fetch_candidates(lo: int, hi: int) -> None:
             rows = spark.range(lo, hi).select(
                 F.col("id").cast("int").alias("c"),
-                F.pmod(F.hash(F.col("id").cast("int")), F.lit(num_parts)).alias("p"),
+                F.pmod(F.hash(F.col("id").cast("int")), F.lit(nb)).alias("p"),
             ).collect()
             part_of.update({row["c"]: row["p"] for row in rows})
 
@@ -416,7 +436,10 @@ def solve_blocked(
                         break
                     fetch_candidates(nb * t_max, nb * t_max * 2)
                     t_max *= 2
-            if not placed:  # astronomically unlikely with 4096 tries
+            # the last block hits its one free partition with
+            # probability 1/nb per try: 4096 tries leave a miss
+            # chance of (1 - 1/nb)^4096, below 1e-17 up to nb = 100
+            if not placed:
                 import logging
 
                 logging.getLogger(__name__).warning(
@@ -441,16 +464,14 @@ def solve_blocked(
 
     def run_chunk(rows: DataFrame, k: int) -> DataFrame:
         schema = "i int, vals array<double>, diffs array<double>"
-        return (
-            fan_out(rows, k)
-            .withColumn("pk", remap_expr.cast("int"))
-            .repartition(num_parts, "pk")
-            .mapInArrow(_chunk_kernel(n, omega, k, rows_per_block), schema=schema)
-        )
+        blocks = fan_out(rows, k)
+        if nb > 1:
+            blocks = blocks.withColumn("pk", remap_expr.cast("int")).repartition(nb, "pk")
+        # else: the fan-out is the identity (b = 0 for every row) and
+        # the grid is already one partition — a narrow map, no exchange
+        return blocks.mapInArrow(_chunk_kernel(n, omega, k, rows_per_block), schema=schema)
 
-    chunk_start, cur_ids = checkpoint_tracked(
-        make_grid_rows(spark, n).repartitionByRange(nb, "i")
-    )
+    chunk_start, cur_ids = checkpoint_tracked(make_grid_rows(spark, n, nb))
     num_iterations = 0
     final_diff = float("inf")
     breakdown_s = 0.0
@@ -462,7 +483,11 @@ def solve_blocked(
             k = min(k, max_iterations - num_iterations)
             if k <= 0:
                 break
-        chunk_end, end_ids = checkpoint_tracked(run_chunk(chunk_start, k))
+        # lazy cut: the max-diff collect below reads every partition of
+        # the cut, so it computes the chunk and fills its blocks in the
+        # same job — no separate count job. chunk_start must stay
+        # stored until that collect has run.
+        chunk_end, end_ids = checkpoint_tracked(run_chunk(chunk_start, k), eager=False)
         tr = time.monotonic()
         per_block = chunk_end.where(F.col("diffs").isNotNull()).select("diffs").collect()
         maxes = [max(row["diffs"][s] for row in per_block) for s in range(k)]

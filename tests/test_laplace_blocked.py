@@ -122,3 +122,78 @@ def test_chunking_invariance_bit_exact(spark):
         r = solve_blocked(spark, n, num_blocks=nb, sweeps_per_job=k)
         assert r.num_iterations == base.num_iterations, (nb, k)
         assert laplace.format_grid(r, n) == base_grid, (nb, k)
+
+
+def test_chunking_invariance_reliable_checkpoints(spark, monkeypatch):
+    """The chunk's lazy lineage cut is filled by the max-diff collect.
+    In reliable mode a lazy ``checkpoint()`` writes its files in a
+    second job after that collect, recomputing the chunk; grids,
+    iteration counts and final diffs must still match the
+    local-checkpoint run bit for bit — k=1 chunks, a chunk-boundary
+    convergence and a mid-chunk convergence redo included."""
+    n = 12
+    base = solve_blocked(spark, n, num_blocks=1, sweeps_per_job=64)
+    base_grid = laplace.format_grid(base, n)
+    # convergence lands mid-chunk for k=5 and k=64, on a chunk end for k=1
+    assert base.num_iterations % 5 != 0 and base.num_iterations % 64 != 0
+    monkeypatch.setenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", "1")
+    for nb, k in [(1, 1), (3, 5), (2, 64)]:
+        r = solve_blocked(spark, n, num_blocks=nb, sweeps_per_job=k)
+        assert r.num_iterations == base.num_iterations, (nb, k)
+        assert r.final_diff == base.final_diff, (nb, k)
+        assert laplace.format_grid(r, n) == base_grid, (nb, k)
+
+
+def _solve_traced(spark, monkeypatch, group: str, n: int, **kw):
+    """Run ``solve_blocked`` with local checkpoints under its own job
+    group; return the result and, per job in submission order, the
+    (name, task count) of each stage it ran. A skipped stage (its
+    shuffle output was reused) completes no tasks and is left out; it
+    is also the first kind of stage the status store evicts."""
+    # reliable checkpoints add one file-writing job per cut
+    monkeypatch.delenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", raising=False)
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        r = solve_blocked(spark, n, **kw)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status tracker is filled by a listener on Spark's event bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = []
+    for job_id in sorted(tracker.getJobIdsForGroup(group)):
+        stages = [tracker.getStageInfo(s) for s in sorted(tracker.getJobInfo(job_id).stageIds)]
+        jobs.append([(s.name, s.numTasks) for s in stages if s and s.numCompletedTasks > 0])
+    return r, jobs
+
+
+def test_one_block_job_and_task_budget(spark, monkeypatch):
+    """One block (the default sizing below N=256 at k=32): each chunk
+    is ONE job — a narrow mapInArrow over the one-partition grid,
+    whose lazy cut the max-diff collect fills — and every stage runs
+    one task; no exchange anywhere. Besides the chunks, only the
+    initial cut and the mid-chunk redo cut run jobs."""
+    r, jobs = _solve_traced(spark, monkeypatch, "laplace-budget-1", 16, sweeps_per_job=8)
+    assert r.num_iterations == 132
+    chunks = -(-132 // 8)
+    assert len(jobs) <= chunks + 3, jobs
+    assert all(tasks == 1 for job in jobs for _, tasks in job), jobs
+
+
+def test_multi_block_one_task_per_block(spark, monkeypatch):
+    """Three blocks: the halo exchange targets exactly 3 partitions, so
+    each chunk's mapInArrow stage — the result stage of its max-diff
+    collect — runs one task per block and no empty Python task. The
+    session's shuffle.partitions (not 3) would otherwise set the width."""
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) != 3
+    r, jobs = _solve_traced(
+        spark, monkeypatch, "laplace-budget-3", 16, num_blocks=3, sweeps_per_job=8
+    )
+    assert r.num_iterations == 132
+    chunks = -(-132 // 8)
+    # the first job looks up the remap candidates' Murmur3 partitions
+    chunk_stages = [job[-1] for job in jobs[1:] if job[-1][0].startswith("collect at ")]
+    assert len(chunk_stages) == chunks, jobs
+    assert all(tasks == 3 for _, tasks in chunk_stages), chunk_stages

@@ -7,8 +7,9 @@ Default solver is the temporal-blocked one (laplace_blocked.solve_blocked);
 ``--blocks`` overrides its block-count heuristic (the BASELINE.md rows at
 N >= 1024 used explicit counts), ``--per-sweep`` measures the faithful
 two-shuffles-per-sweep plan instead. Prints the reference-format stats
-line plus job/chunk accounting so the Spark-vs-C ratio in BASELINE.md is
-a measured number, not an argument.
+line plus job/chunk accounting — the chunk estimate next to the solve's
+job count read from Spark's status tracker — so the Spark-vs-C ratio in
+BASELINE.md is a measured number, not an argument.
 """
 from __future__ import annotations
 
@@ -41,14 +42,19 @@ def main() -> None:
         cpus=cpus,
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
+    sc = spark.sparkContext
+    sc.setJobGroup("laplace-perf", "laplace-perf")
     if per_sweep:
         res = laplace.solve(spark, n, sweeps_per_job=sweeps)
     else:
         res = solve_blocked(spark, n, num_blocks=num_blocks, sweeps_per_job=sweeps)
+    # the status tracker is filled by a listener on Spark's event bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup("laplace-perf"))
     laplace.print_stats(res, file=sys.stdout)
     print(
         f"config: N={n} sweeps_per_job={sweeps} cpus={cpus} "
-        f"chunks~={(res.num_iterations + sweeps - 1) // sweeps} "
+        f"chunks~={(res.num_iterations + sweeps - 1) // sweeps} jobs={jobs} "
         f"s_per_iter={res.duration_s / max(1, res.num_iterations):.4f}"
     )
     spark.stop()

@@ -25,7 +25,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from pwir_zadanie_4_mapreduce_spark import catalog, laplace
+from pwir_zadanie_4_mapreduce_spark import catalog
 from pwir_zadanie_4_mapreduce_spark.laplace_blocked import solve_blocked
 from pwir_zadanie_4_mapreduce_spark.operators import ORACLES, QUERIES
 from pwir_zadanie_4_mapreduce_spark.operators.relational import q1_pricing_summary
@@ -54,12 +54,7 @@ def _last_driver_checked_round() -> dict[str, int]:
     and a dead name must not pin ``min(last.values())`` below every
     live name's round — only names still in the registry matter for
     rotation order."""
-    live = set(QUERIES) | {
-        "laplace_sor_n8",
-        "laplace_sor_n4",
-        "laplace_blocked_sor_n8",
-        "laplace_blocked_sor_n4",
-    }
+    live = set(QUERIES) | set(_LAPLACE)
     last: dict[str, int] = {}
     for path in sorted(glob.glob(os.path.join(_REPO_DIR, "CORRECTNESS_r*.json"))):
         m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
@@ -85,45 +80,6 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
     get_or_tune(spark)
     return q1_pricing_summary(spark, catalog.SMOKE_SF_DIR)
-
-
-def _laplace_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference capability (SURVEY.md §7.2): N=8 red-black SOR to
-    convergence; golden-output tested against laplace-seq.exe in
-    tests/test_laplace.py (47 iterations, per-cell <= 1e-9)."""
-    get_or_tune(spark)
-    result = laplace.solve(spark, n=8)
-    return result.grid.orderBy("i", "j")
-
-
-def _laplace_query_n4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Second grid size through the same solver (N=4: 15 iterations,
-    golden-checked byte-for-byte in tests/test_laplace.py) — exposes
-    the N-parameterization in the registry, mirroring the reference's
-    CLI argument (laplace-seq.c:154)."""
-    get_or_tune(spark)
-    result = laplace.solve(spark, n=4)
-    return result.grid.orderBy("i", "j")
-
-
-def _laplace_blocked_query_n8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temporal-blocked (deep-halo) solver, same capability as
-    laplace_sor_n8 but one shuffle per k sweeps instead of two per
-    sweep (laplace_blocked.py; ghost-zone exchange analog of
-    laplace-par.c:120-129). Forced multi-block so the registry entry
-    exercises the distributed path; bit-identical to the per-sweep
-    solver (tests/test_laplace_blocked.py)."""
-    get_or_tune(spark)
-    result = solve_blocked(spark, n=8, num_blocks=3, sweeps_per_job=8)
-    return result.grid.orderBy("i", "j")
-
-
-def _laplace_blocked_query_n4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """N=4 through the blocked solver (15 iterations, golden grid) —
-    oracle'd against the reference binary's exact output as VALUES."""
-    get_or_tune(spark)
-    result = solve_blocked(spark, n=4, num_blocks=2, sweeps_per_job=4)
-    return result.grid.orderBy("i", "j")
 
 
 # The reference binary's exact output (laplace-seq.exe --verbose N,
@@ -160,6 +116,27 @@ def _golden_values_sql(rows) -> str:
 _GOLDEN_N4_SQL = _golden_values_sql(_GOLDEN_N4_ROWS)
 _GOLDEN_N8_SQL = _golden_values_sql(_GOLDEN_N8_ROWS)
 
+# The Laplace registry entries: name -> (N, solve_blocked kwargs, golden
+# VALUES oracle). The laplace_sor entries run the solver at its default
+# sizing (one block, 32 sweeps per job below N=256 — the shape the CLI
+# and the benchmark run); the laplace_blocked entries force several
+# blocks so the registry also exercises the halo exchange.
+_LAPLACE = {
+    "laplace_sor_n8": (8, {}, _GOLDEN_N8_SQL),
+    "laplace_sor_n4": (4, {}, _GOLDEN_N4_SQL),
+    "laplace_blocked_sor_n8": (8, {"num_blocks": 3, "sweeps_per_job": 8}, _GOLDEN_N8_SQL),
+    "laplace_blocked_sor_n4": (4, {"num_blocks": 2, "sweeps_per_job": 4}, _GOLDEN_N4_SQL),
+}
+
+
+def _laplace_query(n: int, kwargs: dict) -> Callable[[SparkSession, str], DataFrame]:
+    def laplace_query(spark: SparkSession, sf_dir: str) -> DataFrame:
+        """Red-black SOR to convergence (FIXTURES.md §2): the final grid
+        (i, j, v), golden-checked against the reference binary."""
+        return solve_blocked(spark, n, **kwargs).grid.orderBy("i", "j")
+
+    return laplace_query
+
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
@@ -174,10 +151,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return wrapper
 
     out = {name: tuned(fn) for name, fn in QUERIES.items()}
-    out["laplace_sor_n8"] = _laplace_query
-    out["laplace_sor_n4"] = _laplace_query_n4
-    out["laplace_blocked_sor_n8"] = _laplace_blocked_query_n8
-    out["laplace_blocked_sor_n4"] = _laplace_blocked_query_n4
+    out.update({name: tuned(_laplace_query(n, kw)) for name, (n, kw, _) in _LAPLACE.items()})
     last = _last_driver_checked_round()
     order = sorted(out, key=lambda k: (last.get(k, 0), k))
     return {k: out[k] for k in order}
@@ -188,8 +162,5 @@ def oracle_sql() -> dict[str, str]:
     types as the Spark result; doubles rounded to 4 decimals on both
     sides)."""
     out = dict(ORACLES)
-    out["laplace_sor_n4"] = _GOLDEN_N4_SQL
-    out["laplace_blocked_sor_n4"] = _GOLDEN_N4_SQL
-    out["laplace_sor_n8"] = _GOLDEN_N8_SQL
-    out["laplace_blocked_sor_n8"] = _GOLDEN_N8_SQL
+    out.update({name: sql for name, (_, _, sql) in _LAPLACE.items()})
     return out

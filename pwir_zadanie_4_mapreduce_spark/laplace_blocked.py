@@ -1,11 +1,12 @@
-"""Temporal-blocked (deep-halo) red-black SOR — the throughput path.
+"""Red-black SOR Laplace solver with temporal (deep-halo) blocking.
 
-Same capability as :mod:`.laplace` (bit-faithful to
-`/root/reference/laplace-seq.c:184-209`), different physical plan.
-``laplace.solve`` pays two shuffles *per sweep* — the faithful analog
-of the reference's per-sweep halo exchange (laplace-par.c:120-129) —
-which on Spark costs ~1 s of stage scheduling/codegen per iteration at
-small N. This module applies the standard HPC *ghost-zone / temporal
+Bit-faithful to the reference loop (laplace-seq.c:184-209): the
+same iteration count, same final max |Δ|, the same doubles in every
+cell. Its parameters, result type, checkpoint ledger and sinks live in
+:mod:`.laplace`. A red-black sweep needs a halo exchange after each of
+its two color phases (laplace-par.c:120-129); on Spark each exchange
+is a shuffle and a stage, with a fixed scheduling cost whatever the
+grid size. This module applies the standard HPC *ghost-zone / temporal
 blocking* optimization to the Spark execution model:
 
 - the grid state is ROW-oriented: one DataFrame row per grid row
@@ -34,13 +35,15 @@ blocking* optimization to the Spark execution model:
   fills it — so a chunk is ONE job (plus the shuffle-map job of the
   halo exchange when ``nb > 1``), not a cut job and then a collect.
 
-Communication drops from ``2·iters`` shuffles to ``iters/k`` — with
-the fan-out factor ``1 + 4k/rows_per_block`` as the classic ghost-zone
-trade: redundant halo compute for k× fewer synchronizations. At 100 TB
-scale (N ~ 10^5+) blocks hold thousands of rows, so a k of 32-64 costs
-<10% redundancy; the knobs are explicit parameters.
+Communication drops from ``2·iters`` exchanges (one per color phase)
+to ``iters/k`` — with the fan-out factor ``1 + 4k/rows_per_block`` as
+the classic ghost-zone trade: redundant halo compute for k× fewer
+synchronizations. At 100 TB scale (N ~ 10^5+) blocks hold thousands
+of rows, so a k of 32-64 costs <10% redundancy; the knobs are explicit
+parameters.
 
-Bit-exactness argument (verified by golden tests): within one phase
+Bit-exactness argument (checked by the golden tests and by bit-equality
+with a scalar transliteration of the C loop): within one phase
 the C loop updates only cells of one color in place and reads only the
 opposite color (laplace-seq.c:190-199), so the phase is
 order-independent and elementwise numpy evaluation with the same

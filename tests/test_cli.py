@@ -1,7 +1,7 @@
 """CLI front-end contract (reference O17): argument validation and
 the registry listing. The laplace/query subcommands start a Spark
-session, so their end-to-end paths are exercised by test_laplace and
-the operator tests; here we pin the parse/validation behavior."""
+session, so their end-to-end paths are exercised by test_laplace_blocked
+and the operator tests; here we pin the parse/validation behavior."""
 
 from __future__ import annotations
 
@@ -63,14 +63,15 @@ def test_stats_line_carries_breakdown(capsys):
     assert "#iters=15 " in line and "epsilon=0.0000029000" in line
 
 
-def test_blocked_flag_accepted():
-    """`laplace --blocked N` parses; N validation applies before any
-    Spark work either way."""
-    from pwir_zadanie_4_mapreduce_spark.cli import _build_parser, main
+def test_laplace_parses_only_verbose_and_n():
+    """`laplace [--verbose] N` is the whole contract (laplace-seq.c:11-19):
+    there is one solver, so no flag selects one."""
+    from pwir_zadanie_4_mapreduce_spark.cli import _build_parser
 
-    args = _build_parser().parse_args(["laplace", "--blocked", "4"])
-    assert args.blocked and args.n == 4
-    assert main(["laplace", "--blocked", "1"]) == 1  # N < 2 rejected
+    args = _build_parser().parse_args(["laplace", "--verbose", "4"])
+    assert args.verbose and args.n == 4
+    with pytest.raises(SystemExit):
+        _build_parser().parse_args(["laplace", "--blocked", "4"])
 
 
 def test_driver_sample_rotation_least_recently_sampled_first():

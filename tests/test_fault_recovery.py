@@ -1,9 +1,9 @@
 """Executor-loss recovery for the iterative family (round-9 verdict #5).
 
-Gated behind PWIR_CHAOS=1 like the big laplace tests: it boots a
-multi-JVM local-cluster in a subprocess (own session, so it can never
-collide with the suite's local[8] fixture), SIGKILLs an executor JVM
-mid-query, and hash-compares against an undisturbed baseline. ~3-5 min.
+Gated behind PWIR_CHAOS=1: it boots a multi-JVM local-cluster in a
+subprocess (own session, so it can never collide with the suite's
+local[8] fixture), SIGKILLs an executor JVM mid-query, and
+hash-compares against an undisturbed baseline. ~3-5 min.
 
 The committed evidence from running this harness is CHAOS_r10.json
 (tools/chaos_kill.py --out). Default-mode (localCheckpoint) behavior

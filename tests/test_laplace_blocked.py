@@ -1,10 +1,10 @@
-"""Golden-output tests for the temporal-blocked solver
+"""Golden-output tests for the Laplace solver
 (`laplace_blocked.solve_blocked`).
 
-Same oracle as test_laplace.py — the compiled reference binary's exact
-iteration counts / grids — plus cross-solver bit-equality: the blocked
-plan must be indistinguishable from the per-sweep plan, which is itself
-byte-exact against `laplace-seq.exe`.
+Same oracle as test_laplace.py — the reference binary's exact
+iteration counts and grids — plus bit-equality with the scalar
+reference there (a cell-by-cell transliteration of the C loop): grid
+doubles, iteration count and final diff must all be equal.
 
 The block/chunk knobs are deliberately exercised off the defaults
 (forced multi-block, tiny chunks, mid-chunk convergence) because at
@@ -13,14 +13,20 @@ test N the sizing heuristic would otherwise collapse to one block.
 
 from __future__ import annotations
 
-import math
-
 import pytest
 
 from pwir_zadanie_4_mapreduce_spark import laplace
 from pwir_zadanie_4_mapreduce_spark.laplace_blocked import solve_blocked
 
-from tests.test_laplace import GOLDEN_N4, GOLDEN_N8_DIFF, GOLDEN_N8_ITERS, GOLDEN_N8_ROW1
+from tests.test_laplace import GOLDEN_N4, GOLDEN_N8, GOLDEN_STATS, solve_scalar
+
+
+def _assert_matches_scalar(r, n: int, max_iterations: int | None = None) -> None:
+    grid, iterations, final_diff = solve_scalar(n, max_iterations)
+    assert r.num_iterations == iterations
+    assert r.final_diff == final_diff
+    cells = [row["v"] for row in r.grid.orderBy("i", "j").collect()]
+    assert [cells[i * n : (i + 1) * n] for i in range(n)] == grid
 
 
 def test_n_below_2_rejected(spark):
@@ -54,40 +60,35 @@ def test_n8_iterations_and_grid(spark):
     # 3 blocks → ragged last block (8 rows into blocks of 3+3+2),
     # halo (2k=8) wider than a block — the all-to-all degenerate case
     r = solve_blocked(spark, 8, num_blocks=3, sweeps_per_job=4)
-    assert r.num_iterations == GOLDEN_N8_ITERS
-    assert abs(r.final_diff - GOLDEN_N8_DIFF) < 1e-9
-    rows = r.grid.orderBy("i", "j").collect()
-    row1 = [rows[1 * 8 + j]["v"] for j in range(8)]
-    for got, want in zip(row1, GOLDEN_N8_ROW1):
-        assert math.isclose(got, want, abs_tol=1e-9)
+    assert (r.num_iterations, f"{r.final_diff:.10f}") == GOLDEN_STATS[8]
+    assert laplace.format_grid(r, 8) == GOLDEN_N8
 
 
-def test_n8_bit_identical_to_per_sweep_solver(spark):
-    blocked = solve_blocked(spark, 8, num_blocks=2, sweeps_per_job=8)
-    per_sweep = laplace.solve(spark, 8)
-    assert blocked.num_iterations == per_sweep.num_iterations
-    assert laplace.format_grid(blocked, 8) == laplace.format_grid(per_sweep, 8)
+def test_n8_bit_identical_to_scalar_reference(spark):
+    _assert_matches_scalar(solve_blocked(spark, 8, num_blocks=2, sweeps_per_job=8), 8)
 
 
-def test_odd_n_bit_identical_to_per_sweep_solver(spark):
+def test_odd_n_bit_identical_to_scalar_reference(spark):
     """Odd n exercises the strided fallback path of the sweep kernel
-    (the dense-plane fast path requires even n); capped iterations
-    keep the per-sweep reference cheap while still comparing grids
-    byte-for-byte after multiple chunks."""
+    (the dense-plane fast path requires even n): capped after two
+    3-sweep chunks over two blocks, and to convergence at the default
+    sizing."""
     n = 9
-    blocked = solve_blocked(spark, n, num_blocks=2, sweeps_per_job=3, max_iterations=6)
-    per_sweep = laplace.solve(spark, n, max_iterations=6)
-    assert blocked.num_iterations == per_sweep.num_iterations == 6
-    assert laplace.format_grid(blocked, n) == laplace.format_grid(per_sweep, n)
+    r = solve_blocked(spark, n, num_blocks=2, sweeps_per_job=3, max_iterations=6)
+    _assert_matches_scalar(r, n, max_iterations=6)
+    _assert_matches_scalar(solve_blocked(spark, n), n)
 
 
 def test_n16_stats_default_sizing(spark):
-    # defaults (heuristic block count, k=32): 132 iterations, diff
-    # 0.0000056832 — the BASELINE.md row, fast enough here because the
-    # blocked solver is ~50× cheaper per iteration than per-sweep
+    # defaults (heuristic block count, k=32): one block, 5 chunks
     r = solve_blocked(spark, 16)
-    assert r.num_iterations == 132
-    assert abs(r.final_diff - 0.0000056832) < 1e-9
+    assert (r.num_iterations, f"{r.final_diff:.10f}") == GOLDEN_STATS[16]
+
+
+def test_n32_stats_default_sizing(spark):
+    # defaults: one block, 12 one-task chunks
+    r = solve_blocked(spark, 32)
+    assert (r.num_iterations, f"{r.final_diff:.10f}") == GOLDEN_STATS[32]
 
 
 def test_blocked_storage_stays_bounded(spark):

@@ -118,15 +118,15 @@ def test_partitioned_parquet_write_prunes(spark):
         assert "PartitionFilters" in plan or back.count() == expected.count()
 
 
-def test_python_datasource_grid_matches_make_grid(spark):
-    """The custom Python data source must serve the exact grid
-    make_grid generates, and split rows with the reference's
+def test_python_datasource_grid_matches_initial_value(spark):
+    """The custom Python data source must serve the exact grid of the
+    reference's getInitialValue, and split rows with the reference's
     remainder rule (laplace-par.c:245-251: first N%P parts one wider)."""
-    from pwir_zadanie_4_mapreduce_spark import laplace
     from pwir_zadanie_4_mapreduce_spark.sources.grid_source import (
         grid_reader_partitions,
         make_laplace_grid_datasource,
     )
+    from tests.test_laplace import initial_value
 
     try:
         spark.dataSource.register(make_laplace_grid_datasource())
@@ -139,8 +139,8 @@ def test_python_datasource_grid_matches_make_grid(spark):
         .load()
         .collect()
     )
-    want = laplace.make_grid(spark, 5).collect()
-    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+    want = [(i, j, initial_value(i, j, 5)) for i in range(5) for j in range(5)]
+    assert sorted(map(tuple, got)) == want
 
     widths = [
         b.end_row - b.start_row for b in grid_reader_partitions(5, 3)

@@ -1,15 +1,14 @@
 #!/usr/bin/env python
-"""Measure the Laplace solvers at non-toy N for the BASELINE.md perf rows.
+"""Measure the Laplace solver at non-toy N for the BASELINE.md perf rows.
 
-Usage: python tools/laplace_perf.py N [sweeps_per_job] [cpus] [--blocks NB] [--per-sweep]
+Usage: python tools/laplace_perf.py N [sweeps_per_job] [cpus] [--blocks NB]
 
-Default solver is the temporal-blocked one (laplace_blocked.solve_blocked);
-``--blocks`` overrides its block-count heuristic (the BASELINE.md rows at
-N >= 1024 used explicit counts), ``--per-sweep`` measures the faithful
-two-shuffles-per-sweep plan instead. Prints the reference-format stats
-line plus job/chunk accounting — the chunk estimate next to the solve's
-job count read from Spark's status tracker — so the Spark-vs-C ratio in
-BASELINE.md is a measured number, not an argument.
+Runs ``laplace_blocked.solve_blocked``; ``--blocks`` overrides its
+block-count heuristic (the BASELINE.md rows at N >= 1024 used explicit
+counts). Prints the reference-format stats line plus job/chunk
+accounting — the chunk estimate next to the solve's job count read
+from Spark's status tracker — so the Spark-vs-C ratio in BASELINE.md
+is a measured number, not an argument.
 """
 from __future__ import annotations
 
@@ -22,15 +21,14 @@ if REPO_ROOT not in sys.path:
 
 
 def main() -> None:
-    per_sweep = "--per-sweep" in sys.argv
-    args = [a for a in sys.argv[1:] if a != "--per-sweep"]
+    args = sys.argv[1:]
     num_blocks = None
     if "--blocks" in args:
         i = args.index("--blocks")
         num_blocks = int(args[i + 1])
         del args[i : i + 2]
     n = int(args[0])
-    sweeps = int(args[1]) if len(args) > 1 else (8 if per_sweep else 128)
+    sweeps = int(args[1]) if len(args) > 1 else 128
     cpus = int(args[2]) if len(args) > 2 else int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     from pwir_zadanie_4_mapreduce_spark.session import build_session
@@ -44,10 +42,7 @@ def main() -> None:
     )
     sc = spark.sparkContext
     sc.setJobGroup("laplace-perf", "laplace-perf")
-    if per_sweep:
-        res = laplace.solve(spark, n, sweeps_per_job=sweeps)
-    else:
-        res = solve_blocked(spark, n, num_blocks=num_blocks, sweeps_per_job=sweeps)
+    res = solve_blocked(spark, n, num_blocks=num_blocks, sweeps_per_job=sweeps)
     # the status tracker is filled by a listener on Spark's event bus
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     jobs = len(sc.statusTracker().getJobIdsForGroup("laplace-perf"))

@@ -349,13 +349,15 @@ def _host_factor(timings: dict[str, float], ref: dict[str, float]) -> tuple[floa
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-    from pwir_zadanie_4_mapreduce_spark.session import build_session
+    from pwir_zadanie_4_mapreduce_spark.session import (
+        DEFAULT_CPUS,
+        build_session,
+        release_storage,
+    )
 
     spark = build_session(
         app_name="bench",
-        cpus=cpus,
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     src_sf_dir = sf_dir
@@ -366,25 +368,6 @@ def main() -> None:
 
     def materialize(df) -> None:
         df.write.format("noop").mode("overwrite").save()
-
-    def release_storage() -> None:
-        """Unpersist caches/localCheckpoints the previous query pinned.
-
-        Several operators localCheckpoint intermediate frames (the
-        at-scale equivalent is staging to a table); without cleanup
-        those blocks accumulate across the 60+ query run, and late
-        queries measure the storage pressure of every earlier one
-        (observed 10× slowdowns) instead of their own plan."""
-        spark.catalog.clearCache()
-        try:
-            # localCheckpoint blocks are RDD-level, invisible to
-            # catalog.clearCache(); the py4j handle is the only hook.
-            # Guarded: it is a private API with no stability guarantee,
-            # and losing the cleanup must not abort the whole bench.
-            for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                rdd.unpersist()
-        except Exception:
-            pass
 
     # warm-up: JVM, codegen, parquet footer caches
     materialize(queries["q1_pricing_summary"](spark, sf_dir))
@@ -448,7 +431,7 @@ def main() -> None:
     for name in HEADLINE:
         runs: list[float] = []
         for _ in range(runs_per_query):
-            release_storage()
+            release_storage(spark)
             t0 = time.monotonic()
             materialize(queries[name](spark, sf_dir))
             runs.append(time.monotonic() - t0)
@@ -459,7 +442,7 @@ def main() -> None:
         # spread means the measurement is suspect; one more sample
         # bounds the cost to the noisy queries only.
         if runs_per_query >= 2 and max(runs) > 1.4 * min(runs):
-            release_storage()
+            release_storage(spark)
             t0 = time.monotonic()
             materialize(queries[name](spark, sf_dir))
             runs.append(time.monotonic() - t0)
@@ -490,7 +473,7 @@ def main() -> None:
             if ref.get(q, 0) >= 0.1 and t > 1.5 * band * ref[q]
         ]
         for name in suspects[:12]:  # bound the extra cost
-            release_storage()
+            release_storage(spark)
             t0 = time.monotonic()
             materialize(queries[name](spark, sf_dir))
             timings[name] = round(min(timings[name], time.monotonic() - t0), 3)
@@ -507,7 +490,7 @@ def main() -> None:
     # marks the record as drift-contaminated (re-run it).
     canary_end_best = float("inf")
     for _ in range(2):
-        release_storage()
+        release_storage(spark)
         t0 = time.monotonic()
         materialize(queries["q1_pricing_summary"](spark, sf_dir))
         canary_end_best = min(canary_end_best, time.monotonic() - t0)
@@ -559,7 +542,7 @@ def main() -> None:
             "canary_fast_ref_s": canary_ref,
             "canary_verdict": canary_verdict,
             "testdata_fingerprint": _testdata_fingerprint(src_sf_dir),
-            "master": os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]"),
+            "master": os.environ.get("SPARK_GRAFT_MASTER", f"local[{DEFAULT_CPUS}]"),
         }
     )
     print(line)

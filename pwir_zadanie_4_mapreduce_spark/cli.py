@@ -11,7 +11,9 @@ Subcommands:
   engine query and print the result (collect on the driver, as the
   reference's gather sink O14 does).
 - ``list`` — list registered query names.
-- ``bench`` — delegate to bench.py's main.
+
+``list`` and ``query`` read one registry, ``__spark_entry__.queries()``
+(the engine queries plus the Laplace entries).
 
 Usage mirrors the reference's printUsage: errors exit 1 with a usage
 line on stderr.
@@ -44,6 +46,14 @@ def _build_parser() -> argparse.ArgumentParser:
     return p
 
 
+def registry() -> dict:
+    """The runnable queries, by name: the registry the driver contract
+    publishes, so every name ``list`` prints is one ``query`` runs."""
+    import __spark_entry__
+
+    return __spark_entry__.queries()
+
+
 def main(argv: list[str] | None = None) -> int:
     args = _build_parser().parse_args(argv)
 
@@ -53,21 +63,15 @@ def main(argv: list[str] | None = None) -> int:
         return 1
 
     if args.cmd == "list":
-        # derive from the same registry __spark_entry__ publishes so
-        # `list` always reflects the runnable set (laplace entries incl.)
-        try:
-            import __spark_entry__ as entry_mod
-
-            names = sorted(entry_mod.queries())
-        except ImportError:  # package installed without the repo-root entry
-            from pwir_zadanie_4_mapreduce_spark.operators import QUERIES
-
-            names = sorted(QUERIES) + sorted(
-                f"laplace{b}_sor_n{n}" for b in ("", "_blocked") for n in (4, 8)
-            )
-        for name in names:
+        for name in sorted(registry()):
             print(name)
         return 0
+
+    if args.cmd == "query":
+        queries = registry()
+        if args.name not in queries:
+            print(f"error: unknown query {args.name!r} (see `list`)", file=sys.stderr)
+            return 1
 
     from pwir_zadanie_4_mapreduce_spark.session import build_session
 
@@ -84,13 +88,7 @@ def main(argv: list[str] | None = None) -> int:
             return 0
 
         if args.cmd == "query":
-            from pwir_zadanie_4_mapreduce_spark.operators import QUERIES
-
-            if args.name not in QUERIES:
-                print(f"error: unknown query {args.name!r} (see `list`)", file=sys.stderr)
-                return 1
-            df = QUERIES[args.name](spark, args.sf_dir)
-            df.show(args.limit, truncate=False)
+            queries[args.name](spark, args.sf_dir).show(args.limit, truncate=False)
             return 0
     finally:
         spark.stop()

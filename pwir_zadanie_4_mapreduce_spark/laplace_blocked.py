@@ -22,7 +22,8 @@ blocking* optimization to the Spark execution model:
   empty. With one block there is no halo to ship and no shuffle: the
   chunk is a narrow map over the one-partition grid;
 - each block then runs all ``k`` sweeps locally in vectorized numpy
-  inside ``mapInArrow`` — zero communication for k sweeps. Halo
+  inside ``mapInArrow`` (one dense-plane kernel for every N, odd or
+  even) — zero communication for k sweeps. Halo
   rows go stale one dependency-radius per sweep, but the owned rows
   sit ``>= 2k`` rows from any missing edge, so after k sweeps every
   owned row is *exactly* the value the sequential program computes;
@@ -103,78 +104,28 @@ def _sweeps_factory():
     an arbitrary cwd cannot import this package — the repo-wide worker
     -closure convention (multimodal.py:52)."""
 
-    def run_strided(arr, i0, n, omega, k, own_lo, own_hi):
-        """Strided-view sweep path (any n, incl. odd): four
-        (row-parity × color) step-2 views per sweep. Kept as the
-        generic fallback; the even-n plane path below is the fast one
-        (bit-identical — same operands, same op order)."""
-        import numpy as np
+    def run_local_sweeps(arr, i0, n, omega, k, own_lo, own_hi):
+        """Run ``k`` red-black SOR sweeps in place over ``arr`` (local
+        rows ``[i0, i0+L)`` × all N columns); return per-sweep max |Δ|
+        over the owned rows ``[own_lo, own_hi)``.
 
-        L = arr.shape[0]
-        # locally-updatable rows: have both neighbors in arr AND are global interior
-        rlo = max(1, 1 - i0)  # local index of first updatable row
-        rhi = min(L - 1, (n - 1) - i0)  # one past last updatable row
-        diffs: list[float] = []
-        if rlo >= rhi or n <= 2:
-            return [0.0] * k
-        o_lo = max(own_lo - i0, rlo)  # owned ∩ updatable, local indices
-        o_hi = min(own_hi - i0, rhi)
-        # Strided half-lattice sub-problems: for phase `color`, rows of
-        # global parity p update columns j ≡ (color - p) mod 2 — four
-        # (row-parity × color) strided views per sweep touch exactly the
-        # N²/2 cells the C loop touches (laplace-seq.c:193), no masking.
-        subsets = []
-        for color in (0, 1):
-            per_color = []
-            for p in (0, 1):
-                r0 = rlo + ((p - (i0 + rlo)) % 2)
-                if r0 >= rhi:
-                    continue
-                j0 = 1 if (p + 1) % 2 == color else 2
-                if j0 >= n - 1:
-                    continue
-                rows = slice(r0, rhi, 2)
-                rs = np.arange(r0, rhi, 2)
-                own_rows = (rs >= o_lo) & (rs < o_hi)
-                per_color.append((rows, j0, own_rows))
-            subsets.append(per_color)
-        for _ in range(k):
-            sweep_max = 0.0
-            for per_color in subsets:
-                for rows, j0, own_rows in per_color:
-                    cur = arr[rows, j0 : n - 1 : 2]
-                    up = arr[rows.start - 1 : rows.stop - 1 : 2, j0 : n - 1 : 2]
-                    down = arr[rows.start + 1 : rows.stop + 1 : 2, j0 : n - 1 : 2]
-                    left = arr[rows, j0 - 1 : n - 2 : 2]
-                    right = arr[rows, j0 + 1 : n : 2]
-                    # ((up + down) + left) + right, / 4.0 — laplace-seq.c:196
-                    tmp = up + down
-                    tmp += left
-                    tmp += right
-                    tmp /= 4.0
-                    # (1 - ω)·v + ω·tmp — laplace-seq.c:198
-                    new = (1.0 - omega) * cur + omega * tmp
-                    if own_rows.any():
-                        d = np.abs(cur[own_rows] - new[own_rows])
-                        if d.size:
-                            phase_max = float(d.max())
-                            if phase_max > sweep_max:
-                                sweep_max = phase_max
-                    arr[rows, j0 : n - 1 : 2] = new
-            diffs.append(sweep_max)
-        return diffs
+        Local edge rows (missing a neighbor) are never written;
+        staleness propagates inward at the dependency radius (2 rows
+        per sweep) and never reaches the owned region within k sweeps
+        — see module docstring.
 
-    def run_planes(arr, i0, n, omega, k, own_lo, own_hi):
-        """Checkerboard-compact sweep path for EVEN n: the four
-        (color × row-parity) half-lattices are gathered into four
-        fully-dense planes (contiguous in both dims), so every stencil
-        term is a contiguous slice and the hot loop runs numpy at
-        streaming speed with preallocated buffers — measured 1.43×
-        over the strided views at N=8192 block shape. Same float64
-        operands combined in the same order (((up+down)+left)+right)/4,
-        then (1-ω)v + ωtmp — so grids and per-sweep diffs are
-        BIT-IDENTICAL to the strided path (asserted for both paths by
-        the golden and chunking-invariance tests)."""
+        Checkerboard-compact layout: the four (color × row-parity)
+        half-lattices are gathered into four fully-dense planes
+        (contiguous in both dims), so every stencil term is a
+        contiguous slice and the hot loop runs numpy at streaming
+        speed with preallocated buffers — measured 1.43× over strided
+        step-2 views at N=8192 block shape. For odd n the two column
+        parities hold (n+1)/2 and (n-1)/2 columns; the interior column
+        bounds below cover both. Same float64 operands combined in the
+        same order as the C loop, (((up+down)+left)+right)/4, then
+        (1-ω)v + ωtmp, so grids and per-sweep diffs are bit-identical
+        to it (the golden and scalar-reference tests).
+        """
         import numpy as np
 
         L = arr.shape[0]
@@ -184,7 +135,6 @@ def _sweeps_factory():
             return [0.0] * k
         o_lo = max(own_lo - i0, rlo)
         o_hi = min(own_hi - i0, rhi)
-        h = n // 2
         start = [(0 - i0) % 2, (1 - i0) % 2]  # first local row of parity p
         # planes[c][p][q, m] = arr[start[p] + 2q, 2m + ((c + p) % 2)]
         planes = [[None, None], [None, None]]
@@ -199,7 +149,8 @@ def _sweeps_factory():
                 if r0 >= rhi:
                     continue
                 j_par = (c + p) % 2
-                ms = slice(1, h) if j_par == 0 else slice(0, h - 1)
+                # interior columns: 1 <= 2m + j_par <= n - 2
+                ms = slice(1, n // 2) if j_par == 0 else slice(0, (n - 1) // 2)
                 if ms.start >= ms.stop:
                     continue
                 width = ms.stop - ms.start
@@ -255,22 +206,6 @@ def _sweeps_factory():
                 rows = slice(start[p], L, 2)
                 arr[rows, ((c + p) % 2)::2] = planes[c][p]
         return diffs
-
-    def run_local_sweeps(arr, i0, n, omega, k, own_lo, own_hi):
-        """Run ``k`` red-black SOR sweeps in place over ``arr`` (local
-        rows ``[i0, i0+L)`` × all N columns); return per-sweep max |Δ|
-        over the owned rows ``[own_lo, own_hi)``.
-
-        Local edge rows (missing a neighbor) are never written;
-        staleness propagates inward at the dependency radius (2 rows
-        per sweep) and never reaches the owned region within k sweeps
-        — see module docstring. Dispatches to the dense-plane path for
-        even n (the only shapes the plane gather/scatter handles),
-        strided views otherwise; both paths are bit-identical.
-        """
-        if n % 2 == 0:
-            return run_planes(arr, i0, n, omega, k, own_lo, own_hi)
-        return run_strided(arr, i0, n, omega, k, own_lo, own_hi)
 
     return run_local_sweeps
 

@@ -1110,8 +1110,8 @@ def graph_pagerank_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # already satisfied and ZERO shuffle exchanges run inside the loop
     # (test_shuffle_volume pins it). The |E|-row repartition is paid
     # once at cache build instead of once per round; storage is
-    # released by the caller's clearCache (bench.release_storage) like
-    # every other checkpointed frame.
+    # released by the caller (session.release_storage) like every
+    # other checkpointed frame.
     edeg = edges.repartition("dst").cache()
     ranks = deg.select(
         F.col("src").alias("node"), F.lit(PAGERANK_SCALE).cast("bigint").alias("r")

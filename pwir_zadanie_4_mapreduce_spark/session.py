@@ -107,3 +107,26 @@ def get_or_tune(spark: SparkSession) -> SparkSession:
         except Exception:
             pass  # some confs may be fixed by the driver's session
     return spark
+
+
+def release_storage(spark: SparkSession) -> None:
+    """Unpersist caches/localCheckpoints the previous query pinned.
+
+    Several operators localCheckpoint intermediate frames (the
+    at-scale equivalent is staging to a table); without cleanup
+    those blocks accumulate across a long run of queries, and late
+    queries measure the storage pressure of every earlier one
+    (observed 10× slowdowns) instead of their own plan. Releases
+    EVERYTHING the session holds: a DataFrame built before the call
+    and read after it fails on its released local checkpoint, so call
+    it between queries, never under a live one."""
+    spark.catalog.clearCache()
+    try:
+        # localCheckpoint blocks are RDD-level, invisible to
+        # catalog.clearCache(); the py4j handle is the only hook.
+        # Guarded: it is a private API with no stability guarantee,
+        # and losing the cleanup must not abort the caller's run.
+        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+            rdd.unpersist()
+    except Exception:
+        pass

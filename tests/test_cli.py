@@ -29,6 +29,25 @@ def test_list_prints_every_query(capsys):
         assert name in out
 
 
+def test_query_resolves_every_listed_name(capsys, monkeypatch):
+    """`list` and `query` read one registry: each listed name resolves
+    (the Laplace entries too), and an unknown name fails before any
+    Spark session starts."""
+    from pwir_zadanie_4_mapreduce_spark import cli, session
+
+    assert main(["list"]) == 0
+    listed = capsys.readouterr().out.splitlines()
+    assert "laplace_sor_n4" in listed
+    assert set(listed) <= set(cli.registry())
+
+    def no_session(*args, **kwargs):
+        raise AssertionError("session started for an unknown query")
+
+    monkeypatch.setattr(session, "build_session", no_session)
+    assert main(["query", "no_such_query"]) == 1
+    assert "unknown query 'no_such_query'" in capsys.readouterr().err
+
+
 def test_laplace_rejects_n_below_2(capsys):
     # laplace-seq.c:155-161 rejects N < 2
     assert main(["laplace", "1"]) == 1

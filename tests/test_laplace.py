@@ -10,9 +10,11 @@ bit-equality with it.
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 
 from pwir_zadanie_4_mapreduce_spark import laplace
+from pwir_zadanie_4_mapreduce_spark.laplace_blocked import _run_local_sweeps
 
 GOLDEN_N4 = """4.5600000000 4.5600000000 4.5600000000 4.5600000000
 7.3200000000 6.5462491961 6.4362495359 6.8800000000
@@ -107,3 +109,21 @@ def test_n8_iterations_and_grid():
 def test_scalar_reference_stats(n):
     _, iterations, final_diff = solve_scalar(n)
     assert (iterations, f"{final_diff:.10f}") == GOLDEN_STATS[n]
+
+
+@pytest.mark.parametrize("n", [3, 5, 8, 9, 17])
+def test_sweep_kernel_bit_equal_to_scalar(n):
+    """The blocked solver's numpy kernel, run over the whole grid one
+    sweep at a time to convergence, equals the scalar loop bit for bit,
+    for odd and even n (n=3: one parity has no interior column)."""
+    omega, epsilon = laplace.get_omega(n), laplace.get_epsilon(n)
+    arr = np.array([[initial_value(i, j, n) for j in range(n)] for i in range(n)])
+    iterations = 0
+    while True:
+        (max_diff,) = _run_local_sweeps(arr, 0, n, omega, 1, 0, n)
+        iterations += 1
+        if max_diff <= epsilon:
+            break
+    grid, scalar_iterations, scalar_diff = solve_scalar(n)
+    assert (iterations, max_diff) == (scalar_iterations, scalar_diff)
+    assert arr.tolist() == grid

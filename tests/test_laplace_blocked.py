@@ -69,10 +69,9 @@ def test_n8_bit_identical_to_scalar_reference(spark):
 
 
 def test_odd_n_bit_identical_to_scalar_reference(spark):
-    """Odd n exercises the strided fallback path of the sweep kernel
-    (the dense-plane fast path requires even n): capped after two
-    3-sweep chunks over two blocks, and to convergence at the default
-    sizing."""
+    """Odd n gives the sweep kernel's two column parities unequal
+    widths: capped after two 3-sweep chunks over two blocks, and to
+    convergence at the default sizing."""
     n = 9
     r = solve_blocked(spark, n, num_blocks=2, sweeps_per_job=3, max_iterations=6)
     _assert_matches_scalar(r, n, max_iterations=6)

@@ -174,7 +174,7 @@ def main(argv: list[str]) -> int:
     import duckdb
 
     import __spark_entry__ as entrymod
-    from pwir_zadanie_4_mapreduce_spark.session import build_session
+    from pwir_zadanie_4_mapreduce_spark.session import build_session, release_storage
 
     out_path = None
     if "--out" in argv:
@@ -216,10 +216,10 @@ def main(argv: list[str]) -> int:
 
     failures = []
     for name in names:
-        # mirror bench.release_storage: queries that cache()/persist
-        # (pagerank's edge frame et al.) must not leak InMemoryRelations
-        # into the shared session across a ~270-query sweep
-        spark.catalog.clearCache()
+        # session.release_storage: queries that cache()/persist
+        # (pagerank's edge frame et al.) or localCheckpoint must not
+        # leak storage into the shared session across a ~300-query sweep
+        release_storage(spark)
         if name not in oracles:
             if out_path:
                 # rows-only by declared design: run it, record rows

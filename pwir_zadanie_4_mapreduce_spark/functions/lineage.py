@@ -1,13 +1,19 @@
 """Lineage cuts with a reliability switch (round-9 verdict #5).
 
-Every multi-pass / iterative operator truncates lineage so re-used or
-per-round frames aren't recomputed from the scan (connected components,
-Lloyd k-means, PageRank, BFS, and the fan-in frames several single-job
-ops re-aggregate). The default spelling is ``localCheckpoint`` —
-executor-local block storage, zero extra I/O — which is the right cost
-model on a healthy cluster but NON-RELIABLE: an executor loss destroys
-its blocks, and because the lineage was truncated they cannot be
-recomputed; the job dies (measured in tests/test_fault_recovery.py).
+Multi-pass and iterative operators truncate lineage where a frame is
+read more than once, so it is not recomputed from the scan. Connected
+components cuts every round, because its convergence count reads the
+round's labels. Lloyd k-means, PageRank and BFS cut their inputs once
+(the training set, the edge and degree frames, the edge list) and
+then run rounds without a cut; label propagation runs no cut at all,
+its edges read through a cache (functions/graph.py). The fan-in
+frames several single-job ops re-aggregate are cut too.
+
+The default spelling is ``localCheckpoint`` — executor-local block
+storage, zero extra I/O — which is the right cost model on a healthy
+cluster but NON-RELIABLE: an executor loss destroys its blocks, and
+because the lineage was truncated they cannot be recomputed; the job
+dies (measured in tests/test_fault_recovery.py).
 
 At 100 TB / 1000 executors, task retry and executor loss are routine,
 so the engine exposes the reliable spelling behind one switch:

@@ -22,13 +22,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-
-def _persisted_rdd_ids(sc) -> set[int]:
-    """IDs of the RDDs the context currently holds in block storage
-    (``JavaSparkContext.getPersistentRDDs`` — the public registry that
-    both ``persist`` and ``localCheckpoint`` register into)."""
-    jmap = sc._jsc.getPersistentRDDs()
-    return {int(k) for k in jmap.keySet().toArray()}
+from pwir_zadanie_4_mapreduce_spark.session import pinned_rdds
 
 
 def checkpoint_tracked(df: DataFrame, eager: bool = True) -> tuple[DataFrame, set[int]]:
@@ -48,14 +42,14 @@ def checkpoint_tracked(df: DataFrame, eager: bool = True) -> tuple[DataFrame, se
     the shuffle-map stage at call time (see functions/lineage.py)."""
     from pwir_zadanie_4_mapreduce_spark.functions.lineage import cut_lineage
 
-    sc = df.sparkSession.sparkContext
-    before = _persisted_rdd_ids(sc)
+    spark = df.sparkSession
+    before = set(pinned_rdds(spark))
     # Reliable mode (see functions/lineage.py) writes checkpoint FILES
     # instead of blocks — the id diff is then empty and per-chunk
     # cleanup is the checkpoint dir's (old grids cost disk, not
     # executor memory).
     out = cut_lineage(df, eager=eager)
-    return out, _persisted_rdd_ids(sc) - before
+    return out, set(pinned_rdds(spark)) - before
 
 
 def release_checkpoints(spark: SparkSession, ids: set[int]) -> None:
@@ -64,12 +58,9 @@ def release_checkpoints(spark: SparkSession, ids: set[int]) -> None:
     Non-blocking unpersist; only IDs recorded by ``checkpoint_tracked``
     are touched, so persisted frames owned by other operators in the
     same session are never evicted."""
-    if not ids:
-        return
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for k in jmap.keySet().toArray():
-        if int(k) in ids:
-            jmap.get(k).unpersist(False)
+    for rdd_id, rdd in pinned_rdds(spark).items():
+        if rdd_id in ids:
+            rdd.unpersist(False)
 
 
 def get_omega(n: int) -> float:

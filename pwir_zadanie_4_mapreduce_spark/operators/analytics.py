@@ -22,6 +22,7 @@ from pwir_zadanie_4_mapreduce_spark.catalog import load_table
 from pwir_zadanie_4_mapreduce_spark.functions.rounding import dround
 from pwir_zadanie_4_mapreduce_spark.functions.textfn import tokenize
 from pwir_zadanie_4_mapreduce_spark.operators.registry import register
+from pwir_zadanie_4_mapreduce_spark.functions.graph import VertexSide
 from pwir_zadanie_4_mapreduce_spark.functions.lineage import cut_lineage
 
 
@@ -959,62 +960,41 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     sampled-IVF training mirror established).
 
     Plan: one basket shuffle builds edges (collect_set fan-out, no
-    self-join), then each round is join + two integer aggregations —
-    no Window, labels checkpointed per round (lineage stays flat, the
-    pagerank/components loop discipline). At 100 TB rounds are
-    edge-partitioned joins against an id→label frame: O(E) shuffle of
-    ids and labels only, never payloads."""
+    self-join), then each round is join + two integer aggregations on
+    the graph-round layout (functions/graph.py) — no Window. The
+    LPA_ROUNDS rounds run as one plan, like pagerank's: no lineage
+    cut, since the edges' only reader is their cache, and the
+    per-round cuts measured neutral (sf0.1, local[4]: 2.72 s median
+    per query with cuts, 2.81 s without) while running 10 extra jobs
+    during the build. At 100 TB rounds are edge-partitioned joins
+    against an id→label frame: O(E) shuffle of ids and labels only,
+    never payloads."""
     pairs = basket_part_pairs(spark, sf_dir).select("part_a", "part_b", "support")
     # r12 optimization round (guide §7.2): symmetrization used to be a
-    # unionAll of two selects over `pairs` — un-checkpointed, so the
-    # full basket-assembly pass ran TWICE inside the edge
-    # materialization. One explode emits both orientations per pair in
-    # a single basket pass.
-    edges = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("part_a").alias("u"),
-                        F.col("part_b").alias("v"),
-                        F.col("support"),
-                    ),
-                    F.struct(
-                        F.col("part_b").alias("u"),
-                        F.col("part_a").alias("v"),
-                        F.col("support"),
-                    ),
-                )
-            ).alias("x")
-        )
-        .select("x.u", "x.v", "x.support")
-        .transform(cut_lineage)
-    )
-    # r13 optimization round (guide §2.4, the pagerank/components
-    # layout): edges hash-partitioned by u ONCE and cached; per round
-    # the label table broadcasts onto them, the (u, label) vote agg and
-    # the per-u argmin both ride the cache's hashpartitioning(u) —
-    # hashpartitioning(u) satisfies ClusteredDistribution([u, label])
-    # since equal u implies co-location — so ZERO shuffle exchanges run
-    # inside the loop (the old rounds exchanged the label join + both
-    # aggregations; labels sit behind a lineage cut whose unknown size
-    # statistics defeat the automatic broadcast). Interleaved A/B:
-    # −15 % at 32 cores, −12 % at 8. Same broadcast-threshold fallback
-    # story as pagerank when |V| outgrows the hint.
-    ev = edges.repartition("u").cache()
-    labels = ev.select(F.col("u").alias("node")).distinct().withColumn(
-        "label", F.col("node")
-    )
+    # unionAll of two selects over `pairs`, which ran the full
+    # basket-assembly pass TWICE inside the edge materialization. One
+    # explode emits both orientations per pair in a single basket pass.
+    edges = pairs.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("part_a").alias("u"), F.col("part_b").alias("v"), "support"),
+                F.struct(F.col("part_b").alias("u"), F.col("part_a").alias("v"), "support"),
+            )
+        ).alias("x")
+    ).select("x.u", "x.v", "x.support")
+    # with the labels broadcast, the (u, label) vote and the per-u
+    # argmin both ride the cache's hashpartitioning(u), which satisfies
+    # ClusteredDistribution([u, label])
+    side = VertexSide.of(edges.select(F.col("u").alias("node")).distinct())
+    ev = side.edges(edges, join_key="v", group_key="u")
+    labels = ev.select(F.col("u").alias("node")).distinct().withColumn("label", F.col("node"))
     for _ in range(LPA_ROUNDS):
-        nb = ev.join(F.broadcast(labels), ev["v"] == labels["node"]).select(
-            "u", "label", "support"
-        )
+        nb = ev.join(side(labels), ev["v"] == labels["node"]).select("u", "label", "support")
         votes = nb.groupBy("u", "label").agg(F.sum("support").alias("w"))
         labels = (
             votes.groupBy("u")
             .agg(F.min(F.struct((-F.col("w")).alias("nw"), F.col("label"))).alias("s"))
             .select(F.col("u").alias("node"), F.col("s.label").alias("label"))
-            .transform(cut_lineage)
         )
     return labels.select(
         F.col("node").alias("part"), F.col("label").alias("community")
@@ -1067,16 +1047,14 @@ def graph_pagerank_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     one groupBy (sum onto destination) — the standard vertex-centric
     plan; out-degrees are joined once from a tiny static frame.
 
-    100 TB: the edge frame is partitioned by dst ONCE (cached), the
-    |V|-row rank table broadcasts onto it each round, and the
-    sum-onto-dst groupBy reuses the cached partitioning — zero
-    shuffle exchanges inside the loop (test_shuffle_volume pins it).
-    That beats the naive vertex-centric two-exchanges-per-round plan;
-    it is exactly GraphX's partitioned-edges + broadcast-vertices
-    layout. When |V| outgrows the broadcast threshold, drop the hint:
-    the rank side shuffles |V| per round but the |E|-side stays
-    exchange-free. The fixed iteration count (vs convergence test)
-    keeps the plan fully unrolled and lets AQE size every stage.
+    100 TB: the rounds run on the graph-round layout
+    (functions/graph.py): edges cached once, the |V|-row rank table
+    (with its out-degree) broadcast onto them when ``deg``'s size
+    allows, and zero shuffle exchanges inside the loop
+    (test_shuffle_volume pins it) — GraphX's partitioned-edges +
+    broadcast-vertices layout. The fixed iteration count (vs a
+    convergence test) keeps the plan fully unrolled and lets AQE size
+    every stage.
     """
     pairs = (
         load_table(spark, sf_dir, "lineitem")
@@ -1101,45 +1079,18 @@ def graph_pagerank_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     deg = degS.unionByName(degD).transform(cut_lineage)
     edges = fwd.unionAll(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    # Bare 2-column edge list HASH-PARTITIONED BY dst and CACHED
-    # (round-5 verdict #4): the broadcast rank join and the projection
-    # both preserve the streamed side's partitioning, and
-    # InMemoryRelation (unlike a localCheckpoint's LogicalRDD) keeps
-    # outputPartitioning visible to EnsureRequirements — so every
-    # round's sum-onto-dst groupBy finds its clustering requirement
-    # already satisfied and ZERO shuffle exchanges run inside the loop
-    # (test_shuffle_volume pins it). The |E|-row repartition is paid
-    # once at cache build instead of once per round; storage is
-    # released by the caller (session.release_storage) like every
-    # other checkpointed frame.
-    edeg = edges.repartition("dst").cache()
+    side = VertexSide.of(deg)
+    edeg = side.edges(edges, join_key="src", group_key="dst")
     ranks = deg.select(
         F.col("src").alias("node"), F.lit(PAGERANK_SCALE).cast("bigint").alias("r")
     )
     base = F.lit(PAGERANK_SCALE * 15).cast("bigint") / F.lit(100)
     for _ in range(PAGERANK_ITERS):
-        # rank table is |V| rows vs the edge list's |E| — broadcast it
-        # (with its out-degree joined on, |V|⋈|V| broadcast-side) so
-        # the (big) edge frame never re-shuffles; both per-round
-        # exchanges are broadcasts, zero hash-partitioning. When |V|
-        # outgrows the broadcast threshold, drop the hints and AQE
-        # falls back to shuffled joins — the plan is otherwise
-        # identical.
-        rside = ranks.withColumnRenamed("node", "src").join(F.broadcast(deg), "src")
-        contrib = edeg.join(F.broadcast(rside), "src").select(
-            "dst", F.expr("r div odeg").alias("c")
-        )
-        # group on the raw dst attribute (NOT an alias) so the
-        # checkpoint's hashpartitioning(dst) is recognized and the
-        # exchange is elided; rename afterwards.
+        rside = ranks.withColumnRenamed("node", "src").join(side(deg), "src")
+        contrib = edeg.join(side(rside), "src").select("dst", F.expr("r div odeg").alias("c"))
         ranks = (
             contrib.groupBy("dst")
-            .agg(
-                (
-                    F.floor(base)
-                    + F.expr("85 * sum(c) div 100")
-                ).cast("bigint").alias("r")
-            )
+            .agg((F.floor(base) + F.expr("85 * sum(c) div 100")).cast("bigint").alias("r"))
             .withColumnRenamed("dst", "node")
         )
     return (

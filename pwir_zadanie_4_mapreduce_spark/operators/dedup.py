@@ -39,6 +39,7 @@ from pwir_zadanie_4_mapreduce_spark.functions.textfn import (
 from pwir_zadanie_4_mapreduce_spark.functions.vectors import dot, l2_norm
 from pwir_zadanie_4_mapreduce_spark.functions.rounding import dround
 from pwir_zadanie_4_mapreduce_spark.operators.registry import register
+from pwir_zadanie_4_mapreduce_spark.functions.graph import VertexSide
 from pwir_zadanie_4_mapreduce_spark.functions.lineage import cut_lineage
 
 SHINGLE_WORDS = 3
@@ -739,21 +740,17 @@ def connected_components(
     min(node, min incoming u) — one aggregation, no join (measured
     2.43 s → 1.75 s on dedup_cluster_components at sf0.1).
 
-    r13 optimization round (guide §2.4, the pagerank layout): the
-    edge list is hash-partitioned by v ONCE and CACHED
-    (InMemoryRelation keeps outputPartitioning visible where a
-    localCheckpoint's LogicalRDD does not), and the per-round label
-    table — |component members| rows, tiny next to |E| — BROADCASTS
-    onto it, so the in-loop min-label join and its v-keyed
-    re-aggregation both run with ZERO shuffle exchanges; the old
-    union-then-groupBy round exchanged the edge join AND the
-    aggregation every round (labels sit behind a lineage cut, whose
-    unknown size statistics also defeated the automatic broadcast).
-    The own-label merge and the convergence check ride a second
-    broadcast join instead of the union. When the label table
-    outgrows the broadcast threshold, drop the hints: the label side
-    shuffles per round but the |E| side stays exchange-free — same
-    fallback story as pagerank.
+    Rounds 2+ run on the graph-round layout (functions/graph.py):
+    edges cached once, the label table broadcast onto them when its
+    size allows, and the own-label merge with the convergence flag as
+    a second vertex-side join, instead of the old union-then-groupBy
+    round that exchanged the edge join and the aggregation every
+    round. The per-round cut stays: the convergence count reads it.
+    The near-dup graphs take the shuffle layout: their label table's
+    size estimate inherits the pair join's multiplied one (528 MB for
+    about 500 labels at sf0.01). Measured against the forced
+    broadcast at sf0.1, dedup_cluster_components ran 3.44 vs 3.43 s
+    (min of 3).
 
     ``nodes``: (node); ``edges``: (u, v), directed — pass both
     directions for undirected graphs.
@@ -765,9 +762,10 @@ def connected_components(
         .agg(F.min("label").alias("label"))
         .transform(cut_lineage)
     )
-    ev = edges.repartition("v").cache()
+    side = VertexSide.of(labels)
+    ev = side.edges(edges, join_key="u", group_key="v")
     for _ in range(max_iterations - 1):
-        new_labels = _cc_round(ev, labels).transform(cut_lineage)
+        new_labels = _cc_round(ev, labels, side).transform(cut_lineage)
         changed = new_labels.filter(F.col("label") != F.col("own")).limit(1).count()
         labels = new_labels.select("node", "label")
         if changed == 0:
@@ -776,25 +774,20 @@ def connected_components(
     return labels
 
 
-def _cc_round(ev: DataFrame, labels: DataFrame) -> DataFrame:
-    """ONE min-label propagation round over ``ev`` (edges (u, v),
-    hash-partitioned by v and cached) and ``labels`` (node, label):
-    returns (node, label, own). Shuffle-free when ev's cache is built
-    (test_cc_loop_round_is_shuffle_free pins it): the label broadcasts
-    preserve ev's partitioning, and grouping on the raw v attribute
-    (not an alias) lets the cache's hashpartitioning(v) satisfy the
-    aggregation's clustering requirement (pagerank's trick)."""
+def _cc_round(ev: DataFrame, labels: DataFrame, side: VertexSide) -> DataFrame:
+    """ONE min-label propagation round over ``ev`` (edges (u, v) laid
+    out by ``side.edges``) and ``labels`` (node, label): returns (node,
+    label, own). Shuffle-free with the label side broadcast
+    (test_cc_loop_round_is_shuffle_free pins it)."""
     nbr_min = (
-        ev.join(F.broadcast(labels.withColumnRenamed("node", "u")), "u")
+        ev.join(side(labels.withColumnRenamed("node", "u")), "u")
         .groupBy("v")
         .agg(F.min("label").alias("nbr_min"))
     )
     # symmetrized edges make every paired node appear as some v, but
     # singleton/edge-less nodes only exist in `labels` — the left join
     # keeps them, coalesce leaves their label unchanged.
-    return labels.join(
-        F.broadcast(nbr_min.withColumnRenamed("v", "node")), "node", "left"
-    ).select(
+    return labels.join(side(nbr_min.withColumnRenamed("v", "node")), "node", "left").select(
         "node",
         F.least(F.col("label"), F.coalesce("nbr_min", "label")).alias("label"),
         F.col("label").alias("own"),
@@ -880,27 +873,28 @@ def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     of its duplicate cluster — singletons map to themselves. This is
     the survivor-selection step a dedup pipeline runs after pair
     generation (keep canonical_id, drop the rest)."""
-    docs = load_table(spark, sf_dir, "documents").select(
-        F.col("doc_id").alias("node")
-    )
     pairs = (
         dedup_ngram_jaccard(spark, sf_dir)
         .select("doc_a", "doc_b")
         .transform(cut_lineage)  # pair generation runs once, not per round
     )
-    edges = pairs.select(
-        F.col("doc_a").alias("u"), F.col("doc_b").alias("v")
-    ).unionByName(pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v")))
-    # iterate ONLY over nodes that have an edge (dup-cluster members,
-    # a tiny fraction of the corpus); singletons are their own
-    # canonical by definition and skip the loop entirely.
-    paired_nodes = edges.select(F.col("u").alias("node")).distinct()
-    labels = connected_components(paired_nodes, edges)
-    out = docs.join(labels, "node", "left").select(
-        F.col("node").alias("doc_id"),
-        F.coalesce("label", "node").alias("canonical_id"),
+    return _canonical_ids(spark, sf_dir, pairs).orderBy("doc_id")
+
+
+def _canonical_ids(spark: SparkSession, sf_dir: str, pairs: DataFrame) -> DataFrame:
+    """(doc_id, canonical_id) for every document: connected components
+    over the symmetrized near-dup ``pairs`` (doc_a, doc_b). Only
+    paired documents (dup-cluster members, a tiny fraction of the
+    corpus) enter the loop; singletons are their own canonical id by
+    definition and skip it."""
+    edges = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")).unionByName(
+        pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
     )
-    return out.orderBy("doc_id")
+    labels = connected_components(edges.select(F.col("u").alias("node")).distinct(), edges)
+    docs = load_table(spark, sf_dir, "documents").select(F.col("doc_id").alias("node"))
+    return docs.join(labels, "node", "left").select(
+        F.col("node").alias("doc_id"), F.coalesce("label", "node").alias("canonical_id")
+    )
 
 
 @register(
@@ -973,20 +967,7 @@ def pipeline_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b")
         .transform(cut_lineage)
     )
-    docs = load_table(spark, sf_dir, "documents").select(F.col("doc_id").alias("node"))
-    edges = pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")).unionByName(
-        pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v"))
-    )
-    paired_nodes = edges.select(F.col("u").alias("node")).distinct()
-    labels = connected_components(paired_nodes, edges)
-    assigned = (
-        docs.join(labels, "node", "left")
-        .select(
-            F.col("node").alias("doc_id"),
-            F.coalesce("label", "node").alias("canonical_id"),
-        )
-        .transform(cut_lineage)
-    )
+    assigned = _canonical_ids(spark, sf_dir, pairs).transform(cut_lineage)
     bucket = (
         F.conv(F.substring(F.md5(F.col("canonical_id").cast("string")), 1, 15), 16, 10)
         .cast("long") % SPLIT_MOD

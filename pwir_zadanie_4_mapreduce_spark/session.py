@@ -109,6 +109,17 @@ def get_or_tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def pinned_rdds(spark: SparkSession) -> dict:
+    """The RDDs the session holds in block storage, by id, as py4j
+    handles: ``persist``/``cache`` and ``localCheckpoint`` both
+    register in ``JavaSparkContext.getPersistentRDDs``, which
+    ``catalog.clearCache()`` does not cover. The private ``_jsc``
+    handle is the only way to it from Python; this is the one place
+    that reaches for it."""
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    return {int(k): jmap.get(k) for k in jmap.keySet().toArray()}
+
+
 def release_storage(spark: SparkSession) -> None:
     """Unpersist caches/localCheckpoints the previous query pinned.
 
@@ -122,11 +133,10 @@ def release_storage(spark: SparkSession) -> None:
     it between queries, never under a live one."""
     spark.catalog.clearCache()
     try:
-        # localCheckpoint blocks are RDD-level, invisible to
-        # catalog.clearCache(); the py4j handle is the only hook.
-        # Guarded: it is a private API with no stability guarantee,
-        # and losing the cleanup must not abort the caller's run.
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        # Guarded: pinned_rdds rides a private API with no stability
+        # guarantee, and losing the cleanup must not abort the
+        # caller's run.
+        for rdd in pinned_rdds(spark).values():
             rdd.unpersist()
     except Exception:
         pass

@@ -17,6 +17,7 @@ import pytest
 
 from pwir_zadanie_4_mapreduce_spark import laplace
 from pwir_zadanie_4_mapreduce_spark.laplace_blocked import solve_blocked
+from pwir_zadanie_4_mapreduce_spark.session import pinned_rdds
 
 from tests.test_laplace import GOLDEN_N4, GOLDEN_N8, GOLDEN_STATS, solve_scalar
 
@@ -94,10 +95,9 @@ def test_blocked_storage_stays_bounded(spark):
     """Round-4 advice: the chunk loop must release the previous
     chunk's localCheckpoint — small k at N=16 runs many chunks, each
     materializing a grid; only the final one may remain persisted."""
-    before = laplace._persisted_rdd_ids(spark.sparkContext)
+    before = set(pinned_rdds(spark))
     r = solve_blocked(spark, 16, sweeps_per_job=8)
-    after = laplace._persisted_rdd_ids(spark.sparkContext)
-    leaked = after - before
+    leaked = set(pinned_rdds(spark)) - before
     assert len(leaked) <= 2, f"chunk checkpoints leaked: {sorted(leaked)}"
     assert r.num_iterations == 132
 
@@ -112,16 +112,20 @@ def test_chunking_invariance_bit_exact(spark):
     """The chunk size and block count are pure execution knobs: any
     (num_blocks, sweeps_per_job) combination must produce bit-identical
     grids and identical iteration counts — this sweeps the mid-chunk
-    convergence recompute, the chunk-boundary branch, k=1 (degenerate
-    one-sweep chunks), and halo-wider-than-block placements in one
-    invariant."""
+    convergence recompute, the chunk-boundary branch (86 = 2·43
+    sweeps), halo-wider-than-block placements, and k=1 (degenerate
+    one-sweep chunks, one job per sweep, so capped at a few sweeps
+    and checked against the scalar reference) in one invariant."""
     n = 12
     base = solve_blocked(spark, n, num_blocks=1, sweeps_per_job=64)
     base_grid = laplace.format_grid(base, n)
-    for nb, k in [(1, 1), (3, 5), (4, 7), (2, 64)]:
+    assert base.num_iterations == 86
+    for nb, k in [(3, 5), (4, 7), (2, 64), (1, 43)]:
         r = solve_blocked(spark, n, num_blocks=nb, sweeps_per_job=k)
         assert r.num_iterations == base.num_iterations, (nb, k)
         assert laplace.format_grid(r, n) == base_grid, (nb, k)
+    r = solve_blocked(spark, n, num_blocks=1, sweeps_per_job=1, max_iterations=4)
+    _assert_matches_scalar(r, n, max_iterations=4)
 
 
 def test_chunking_invariance_reliable_checkpoints(spark, monkeypatch):
@@ -129,19 +133,23 @@ def test_chunking_invariance_reliable_checkpoints(spark, monkeypatch):
     In reliable mode a lazy ``checkpoint()`` writes its files in a
     second job after that collect, recomputing the chunk; grids,
     iteration counts and final diffs must still match the
-    local-checkpoint run bit for bit — k=1 chunks, a chunk-boundary
-    convergence and a mid-chunk convergence redo included."""
+    local-checkpoint run bit for bit — a chunk-boundary convergence,
+    a mid-chunk convergence redo with the halo wider than the block,
+    and capped k=1 chunks (against the scalar reference) included."""
     n = 12
     base = solve_blocked(spark, n, num_blocks=1, sweeps_per_job=64)
     base_grid = laplace.format_grid(base, n)
-    # convergence lands mid-chunk for k=5 and k=64, on a chunk end for k=1
+    # convergence lands mid-chunk for k=5 and k=64, on a chunk end for k=43
     assert base.num_iterations % 5 != 0 and base.num_iterations % 64 != 0
+    assert base.num_iterations % 43 == 0
     monkeypatch.setenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", "1")
-    for nb, k in [(1, 1), (3, 5), (2, 64)]:
+    for nb, k in [(3, 5), (2, 64), (1, 43)]:
         r = solve_blocked(spark, n, num_blocks=nb, sweeps_per_job=k)
         assert r.num_iterations == base.num_iterations, (nb, k)
         assert r.final_diff == base.final_diff, (nb, k)
         assert laplace.format_grid(r, n) == base_grid, (nb, k)
+    r = solve_blocked(spark, n, num_blocks=1, sweeps_per_job=1, max_iterations=4)
+    _assert_matches_scalar(r, n, max_iterations=4)
 
 
 def _solve_traced(spark, monkeypatch, group: str, n: int, **kw):

@@ -180,3 +180,15 @@ def test_multifile_fixture_layout_deterministic(spark, tmp_path):
     la, lb = layout(a), layout(b)
     assert len(la) == 8 and la.keys() == lb.keys()
     assert la == lb
+
+
+def test_multifile_progress_goes_to_stderr(spark, tmp_path, capsys):
+    """bench.py builds its multi-file fixtures through ``multifile`` on
+    a fresh checkout, and its stdout must stay the one JSON line the
+    driver parses: the per-table progress lines belong on stderr."""
+    from tools.make_fixtures import multifile
+
+    multifile(spark, SMOKE_SF, str(tmp_path), files=2)
+    out, err = capsys.readouterr()
+    assert out == ""
+    assert "  lineitem: 2 file(s)" in err

@@ -4,14 +4,16 @@ Runs iterative queries on a REAL multi-JVM local-cluster, SIGKILLs one
 executor JVM mid-query, and checks the job still completes with output
 hash-identical to an undisturbed baseline run.
 
-Why this matters at 100 TB: the iterative family (connected components,
-Lloyd k-means, PageRank, BFS) cuts lineage every round. The default cut
-is ``localCheckpoint`` — executor-local blocks that DIE with their
-executor and, with lineage truncated, cannot be recomputed; on a
-1000-executor cluster where executor loss is routine, that plan shape
-fails the job. ``SPARK_GRAFT_RELIABLE_CHECKPOINT=1`` switches every cut
-to reliable ``checkpoint()`` files (functions/lineage.py), which stage
-retry re-reads after any loss. This harness produces the evidence for
+Why this matters at 100 TB: the iterative family cuts lineage:
+connected components every round, Lloyd k-means, PageRank and BFS
+once on the frames their rounds re-read (functions/lineage.py). The
+default cut is ``localCheckpoint`` — executor-local blocks that DIE
+with their executor and, with lineage truncated, cannot be
+recomputed; on a 1000-executor cluster where executor loss is
+routine, that plan shape fails the job.
+``SPARK_GRAFT_RELIABLE_CHECKPOINT=1`` switches every cut to reliable
+``checkpoint()`` files (functions/lineage.py), which stage retry
+re-reads after any loss. This harness produces the evidence for
 both modes.
 
 Usage:

@@ -43,6 +43,9 @@ into:
 Outputs land under the repo's .fixtures/ (gitignored). Never writes
 to /root/testdata.
 
+Progress lines go to stderr: bench.py builds its multi-file fixtures
+through ``multifile``, and its stdout must stay the single JSON line.
+
 Usage:
   python tools/make_fixtures.py multifile /root/testdata/sf0.1 \
       .fixtures/multifile/sf0.1 [--files 32]
@@ -119,7 +122,7 @@ def multifile(spark: SparkSession, src: str, dst: str, files: int = 32) -> None:
         df = load_table(spark, src, name)
         n = 1 if name in SINGLE_FILE else files
         _write(df, os.path.join(dst, f"{name}.parquet"), n, _LAYOUT_KEY.get(name))
-        print(f"  {name}: {n} file(s)")
+        print(f"  {name}: {n} file(s)", file=sys.stderr)
 
 
 def _stride(spark: SparkSession, src: str, name: str, key: str) -> int:
@@ -204,7 +207,7 @@ def scaleup(
                 "s_acctbal",
             )
         _write(df, os.path.join(dst, f"{name}.parquet"), 1)
-        print(f"  {name}: done")
+        print(f"  {name}: done", file=sys.stderr)
 
     if want("customer"):
         df = reps(load_table(spark, src, "customer")).select(
@@ -212,7 +215,7 @@ def scaleup(
             "c_name", "c_nationkey", "c_acctbal", "c_mktsegment",
         )
         _write(df, os.path.join(dst, "customer.parquet"), files, "c_custkey")
-        print("  customer: done")
+        print("  customer: done", file=sys.stderr)
 
     if want("part"):
         df = reps(load_table(spark, src, "part")).select(
@@ -220,7 +223,7 @@ def scaleup(
             "p_name", "p_brand", "p_type", "p_size", "p_retailprice",
         )
         _write(df, os.path.join(dst, "part.parquet"), files, "p_partkey")
-        print("  part: done")
+        print("  part: done", file=sys.stderr)
 
     if want("orders"):
         df = reps(load_table(spark, src, "orders")).select(
@@ -229,7 +232,7 @@ def scaleup(
             "o_orderstatus", "o_totalprice", "o_orderdate", "o_orderpriority",
         )
         _write(df, os.path.join(dst, "orders.parquet"), files, "o_orderkey")
-        print("  orders: done")
+        print("  orders: done", file=sys.stderr)
 
     if want("lineitem"):
         df = reps(load_table(spark, src, "lineitem")).select(
@@ -240,7 +243,7 @@ def scaleup(
             "l_tax", "l_returnflag", "l_linestatus", "l_shipdate",
         )
         _write(df, os.path.join(dst, "lineitem.parquet"), files, ["l_orderkey", "l_linenumber"])
-        print("  lineitem: done")
+        print("  lineitem: done", file=sys.stderr)
 
     if want("events"):
         df = reps(load_table(spark, src, "events")).select(
@@ -250,7 +253,7 @@ def scaleup(
             "event_type", "value", "props",
         )
         _write(df, os.path.join(dst, "events.parquet"), files, "event_id")
-        print("  events: done")
+        print("  events: done", file=sys.stderr)
 
     if want("documents"):
         df = reps(load_table(spark, src, "documents")).select(
@@ -269,7 +272,7 @@ def scaleup(
         # n_chars drifts from len(text) for rep>0; recompute to stay honest
         df = df.withColumn("n_chars", F.length("text").cast("long"))
         _write(df, os.path.join(dst, "documents.parquet"), files, "doc_id")
-        print("  documents: done")
+        print("  documents: done", file=sys.stderr)
 
     if want("embeddings"):
         emb = load_table(spark, src, "embeddings")
@@ -290,7 +293,7 @@ def scaleup(
             "label",
         )
         _write(df, os.path.join(dst, "embeddings.parquet"), files, "vec_id")
-        print("  embeddings: done")
+        print("  embeddings: done", file=sys.stderr)
 
 
 def main() -> None:

@@ -15,9 +15,12 @@ keeps that partitioning visible to the planner, so the |E|-row
 exchange is paid once, at cache build, not once per round. Callers
 aggregate on the RAW key attribute, not an alias, so the cache's
 hashpartitioning satisfies the aggregation's clustering requirement
-and its exchange is elided; they rename afterwards. The cache is the
-caller's to release (`session.release_storage`), since a lazily
-returned frame still reads it.
+and its exchange is elided; they rename afterwards. The cache is
+built when laid out (one count), so the rounds only read it: left to
+them, adaptive execution built it inside the query's action, in one
+job per reader of the cache (4 for label propagation's 3 rounds). It
+is the caller's to release (`session.release_storage`), since a
+lazily returned frame still reads it.
 
 Vertices. With the vertex side broadcast, the edges are partitioned
 by ``group_key``: the broadcast join keeps the stream side's
@@ -43,6 +46,13 @@ Otherwise the edges are partitioned by ``join_key``: the join
 shuffles only the vertex table onto the cached partitions, and the
 aggregation ships its map-side-combined rows (one per key per
 partition), so no edge row crosses an exchange.
+
+Breadth-first search (``graph_bfs_levels``) keeps its own
+unconditional frontier hints. Its frontiers are one supplier's parts
+and those parts' suppliers, small at every scale, but the optimizer
+sizes the first as every part id (a filter keeps its input's
+estimate), and BFS has no edge layout to fall back on: declined, each
+of its semi and anti joins would re-shuffle the whole edge list.
 """
 
 from __future__ import annotations
@@ -71,5 +81,7 @@ class VertexSide:
         return F.broadcast(vertices) if self.broadcast else vertices
 
     def edges(self, edges: DataFrame, join_key: str, group_key: str) -> DataFrame:
-        """``edges`` hash-partitioned for this decision and cached."""
-        return edges.repartition(group_key if self.broadcast else join_key).cache()
+        """``edges`` hash-partitioned for this decision, cached and built."""
+        ev = edges.repartition(group_key if self.broadcast else join_key).cache()
+        ev.count()
+        return ev

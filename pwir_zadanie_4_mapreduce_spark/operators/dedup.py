@@ -746,11 +746,13 @@ def connected_components(
     a second vertex-side join, instead of the old union-then-groupBy
     round that exchanged the edge join and the aggregation every
     round. The per-round cut stays: the convergence count reads it.
-    The near-dup graphs take the shuffle layout: their label table's
-    size estimate inherits the pair join's multiplied one (528 MB for
-    about 500 labels at sf0.01). Measured against the forced
-    broadcast at sf0.1, dedup_cluster_components ran 3.44 vs 3.43 s
-    (min of 3).
+    The near-dup graphs take the shuffle layout at every scale: their
+    label table's size estimate inherits the pair join's multiplied
+    one (528 MB for about 500 labels at sf0.01, 44 GB at sf0.1).
+    Measured against the forced broadcast at sf0.1 (8 rounds, arm
+    order alternated, 4 cores), the median run was 3.87 vs 3.80 s for
+    dedup_cluster_components and 3.56 vs 3.85 s for
+    pipeline_leakage_safe_split, inside the runs' spread.
 
     ``nodes``: (node); ``edges``: (u, v), directed — pass both
     directions for undirected graphs.

@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 from pwir_zadanie_4_mapreduce_spark.catalog import load_table
 from pwir_zadanie_4_mapreduce_spark.functions.rounding import dround
 from pwir_zadanie_4_mapreduce_spark.operators.registry import register
-from pwir_zadanie_4_mapreduce_spark.functions.graph import VertexSide
 from pwir_zadanie_4_mapreduce_spark.functions.lineage import cut_lineage
 
 
@@ -849,24 +848,22 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     note: per-round cost is O(frontier edges), and the unrolled form
     trades driver-loop convergence checks for a fixed depth (the
     production BFS loops with a changed-count check exactly like
-    connected_components).
-
-    The frontier hints follow the graph-round layout's one broadcast
-    decision (functions/graph.py), read once from the first frontier:
-    without column statistics a filter keeps its input's size
-    estimate, so ``p1``'s is that of every part id, and ``s2``'s is of
-    the same one-long-column shape."""
+    connected_components)."""
     edges = (
         load_table(spark, sf_dir, "lineitem")
         .select(F.col("l_suppkey").alias("s"), F.col("l_partkey").alias("p"))
         .distinct()
     ).transform(cut_lineage)
     p1 = edges.filter(F.col("s") == 1).select("p").distinct()
-    side = VertexSide.of(p1)
-    s2 = edges.join(side(p1), "p", "left_semi").filter(F.col("s") != 1).select("s").distinct()
+    s2 = (
+        edges.join(F.broadcast(p1), "p", "left_semi")
+        .filter(F.col("s") != 1)
+        .select("s")
+        .distinct()
+    )
     p3 = (
-        edges.join(side(s2), "s", "left_semi")
-        .join(side(p1), "p", "left_anti")
+        edges.join(F.broadcast(s2), "s", "left_semi")
+        .join(F.broadcast(p1), "p", "left_anti")
         .select("p")
         .distinct()
     )

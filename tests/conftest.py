@@ -3,6 +3,7 @@ with the fixture tables pre-registered (mirroring the driver)."""
 
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -30,6 +31,13 @@ except ModuleNotFoundError:
 
 SMOKE_SF = "/root/testdata/sf0.001"
 CORRECTNESS_SF = "/root/testdata/sf0.01"
+
+# both broadcast thresholds off: no join is planned or re-planned as a
+# broadcast unless a hint asks for it
+NO_BROADCAST = {
+    "spark.sql.autoBroadcastJoinThreshold": "-1",
+    "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
+}
 
 
 @pytest.fixture(scope="session")
@@ -60,3 +68,54 @@ def duck():
         )
     yield con
     con.close()
+
+
+@contextlib.contextmanager
+def session_conf(spark, settings: dict[str, str]):
+    """Set ``settings`` on the shared session for the block, then put
+    each key back. A key that was unset before is unset again: leaving
+    e.g. ``adaptive.autoBroadcastJoinThreshold=-1`` behind would turn
+    off AQE's broadcast conversion for every later test."""
+    saved = {k: spark.conf.get(k, None) for k in settings}
+    for k, v in settings.items():
+        spark.conf.set(k, v)
+    try:
+        yield spark
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+@pytest.fixture()
+def no_broadcast(spark):
+    with session_conf(spark, NO_BROADCAST):
+        yield spark
+
+
+def traced_jobs(spark, group: str, fn):
+    """Run ``fn`` under its own job group; return its result and, per
+    job in submission order, the job's name (the call site Spark names
+    it by, e.g. ``collect at ...``; an AQE query-stage job is named
+    after the executor thunk it runs in) with the (name, task count) of
+    each stage it ran. A skipped stage (its shuffle output was reused)
+    completes no tasks and is left out; it is also the first kind of
+    stage the status store evicts."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status tracker is filled by a listener on Spark's event bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    jobs = []
+    for job_id in sorted(tracker.getJobIdsForGroup(group)):
+        stages = [tracker.getStageInfo(s) for s in sorted(tracker.getJobInfo(job_id).stageIds)]
+        done = [(s.name, s.numTasks) for s in stages if s and s.numCompletedTasks > 0]
+        jobs.append((store.job(job_id).name(), done))
+    return out, jobs

@@ -1,11 +1,11 @@
 """The graph-round layout (`functions/graph.py`): one broadcast
 decision per loop, and the shuffle plan it falls back to.
 
-With ``spark.sql.autoBroadcastJoinThreshold`` forced below every
-vertex table, components, label propagation and pagerank must return
-what their broadcast plans return, and no exchange in their rounds may
-ship edge rows: the edge cache is partitioned by the join key, so only
-the vertex table and map-side-combined aggregation rows move.
+With both broadcast thresholds off, components, label propagation and
+pagerank must return what their broadcast plans return, and no
+exchange in their rounds may ship edge rows: the edge cache is
+partitioned by the join key, so only the vertex table and
+map-side-combined aggregation rows move.
 """
 
 from __future__ import annotations
@@ -16,33 +16,12 @@ from pyspark.sql import functions as F
 from pwir_zadanie_4_mapreduce_spark.functions.graph import VertexSide
 from pwir_zadanie_4_mapreduce_spark.operators.dedup import _cc_round, connected_components
 
-from tests.conftest import SMOKE_SF
-
-THRESHOLDS = (
-    "spark.sql.autoBroadcastJoinThreshold",
-    "spark.sql.adaptive.autoBroadcastJoinThreshold",
-)
+from tests.conftest import NO_BROADCAST, SMOKE_SF, session_conf, traced_jobs
 
 
-@pytest.fixture()
-def tiny_threshold(spark):
-    """Yield a function that runs a callable under a 1-byte broadcast
-    threshold, restoring the session's settings afterwards."""
-
-    def run(fn):
-        saved = {k: spark.conf.get(k, None) for k in THRESHOLDS}
-        for k in THRESHOLDS:
-            spark.conf.set(k, "1")
-        try:
-            return fn()
-        finally:
-            for k, v in saved.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
-
-    yield run
+@pytest.fixture(autouse=True)
+def _release_caches(spark):
+    yield
     spark.catalog.clearCache()
 
 
@@ -107,38 +86,33 @@ def _graph(spark):
     return nodes, edges
 
 
-def test_decision_reads_the_threshold_without_a_job(spark, tiny_threshold):
+def test_decision_reads_the_threshold_without_a_job(spark):
     nodes, _ = _graph(spark)
-    sc = spark.sparkContext
-    sc.setJobGroup("graph-guard", "graph-guard")
-    try:
-        assert VertexSide.of(nodes).broadcast
-        assert not tiny_threshold(lambda: VertexSide.of(nodes)).broadcast
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    assert list(sc.statusTracker().getJobIdsForGroup("graph-guard")) == []
+
+    def decide():
+        admitted = VertexSide.of(nodes).broadcast
+        with session_conf(spark, NO_BROADCAST):
+            return admitted, VertexSide.of(nodes).broadcast
+
+    (admitted, declined), jobs = traced_jobs(spark, "graph-guard", decide)
+    assert admitted and not declined
+    assert jobs == []
 
 
-def test_components_shuffle_plan(spark, tiny_threshold):
+def test_components_shuffle_plan(spark):
     nodes, edges = _graph(spark)
+
     def components():
         return sorted(map(tuple, connected_components(nodes, edges).collect()))
 
     want = components()
-    assert tiny_threshold(components) == want
-    assert {label for _, label in want} == {0, 20}
-
-    def one_round():
+    with session_conf(spark, NO_BROADCAST):
+        assert components() == want
         labels = nodes.select("node", F.col("node").alias("label")).localCheckpoint()
         side = VertexSide.of(labels)
-        ev = side.edges(edges, join_key="u", group_key="v")
-        out = _cc_round(ev, labels, side)
+        out = _cc_round(side.edges(edges, join_key="u", group_key="v"), labels, side)
         out.collect()
-        return side, out
-
-    side, out = tiny_threshold(one_round)
+    assert {label for _, label in want} == {0, 20}
     assert not side.broadcast
     shuffles, broadcasts, edge_rows = _exchanges(out)
     assert shuffles > 0 and broadcasts == 0
@@ -146,55 +120,46 @@ def test_components_shuffle_plan(spark, tiny_threshold):
 
 
 @pytest.mark.parametrize("name", ["graph_label_propagation", "graph_pagerank_fixed"])
-def test_query_shuffle_plan(spark, tiny_threshold, name):
+def test_query_shuffle_plan(spark, name):
     import __spark_entry__ as entrymod
 
     query = entrymod.queries()[name]
     want = query(spark, SMOKE_SF).collect()
-
-    def shuffled():
+    with session_conf(spark, NO_BROADCAST):
         df = query(spark, SMOKE_SF)
-        return df, df.collect()
-
-    df, got = tiny_threshold(shuffled)
+        got = df.collect()
     assert got == want and got
     shuffles, broadcasts, edge_rows = _exchanges(df)
     assert shuffles > 0 and broadcasts == 0
     assert edge_rows == []
 
 
-def _traced(spark, group: str, fn):
-    """Run ``fn`` under its own job group; return its result and the
-    names of the jobs it ran, in submission order."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    tracker = sc.statusTracker()
-    jobs = [tracker.getJobInfo(j) for j in sorted(tracker.getJobIdsForGroup(group))]
-    names = [tracker.getStageInfo(max(j.stageIds)).name for j in jobs]
-    return out, names
-
-
 def test_label_propagation_job_budget(spark, monkeypatch):
     """Label propagation runs its rounds as one plan: no lineage cut,
-    so building the query runs no job but the catalog's, and the
-    broadcast decision adds none. With per-round cuts the build ran
-    11 jobs (sf0.1) and executor loss could destroy the cut blocks."""
+    and the edge cache is built while the query is built, so its
+    action runs one job of its own (the rest are AQE stage jobs). With per-round cuts the build ran 11
+    jobs (sf0.1) and executor loss could destroy the cut blocks; with
+    the cache left to the action, AQE built it in one job per reader."""
     import __spark_entry__ as entrymod
     from pwir_zadanie_4_mapreduce_spark.operators import analytics
 
     cuts = []
     monkeypatch.setattr(analytics, "cut_lineage", lambda df, eager=False: cuts.append(df) or df)
     query = entrymod.queries()["graph_label_propagation"]
-    df, build = _traced(spark, "lpa-build", lambda: query(spark, SMOKE_SF))
-    rows, action = _traced(spark, "lpa-action", df.collect)
-    spark.catalog.clearCache()
-    assert rows and cuts == []
-    assert len(build) <= 1, build
-    # the basket, edge-cache and round stages, each an AQE stage job
-    assert len(action) <= 15, action
+    df, build = traced_jobs(spark, "lpa-build", lambda: query(spark, SMOKE_SF))
+    # the timed action of the benchmark: a collect would lend its call
+    # site to the AQE stage jobs too
+    _, action = traced_jobs(
+        spark, "lpa-action", lambda: df.write.format("noop").mode("overwrite").save()
+    )
+    assert cuts == []
+
+    def own(jobs):
+        names = [name.split(" at ")[0] for name, _ in jobs]
+        return [n for n in names if not n.startswith("$anonfun$withThreadLocalCaptured")]
+
+    # the catalog's parquet job and the edge cache's count
+    assert own(build) == ["parquet", "count"], build
+    assert own(action) == ["save"], action
+    # measured 9 build and 6 action jobs at 2 and at 8 cores
+    assert len(build) + len(action) <= 15, (build, action)

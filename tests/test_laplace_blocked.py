@@ -19,6 +19,7 @@ from pwir_zadanie_4_mapreduce_spark import laplace
 from pwir_zadanie_4_mapreduce_spark.laplace_blocked import solve_blocked
 from pwir_zadanie_4_mapreduce_spark.session import pinned_rdds
 
+from tests.conftest import traced_jobs
 from tests.test_laplace import GOLDEN_N4, GOLDEN_N8, GOLDEN_STATS, solve_scalar
 
 
@@ -154,27 +155,10 @@ def test_chunking_invariance_reliable_checkpoints(spark, monkeypatch):
 
 def _solve_traced(spark, monkeypatch, group: str, n: int, **kw):
     """Run ``solve_blocked`` with local checkpoints under its own job
-    group; return the result and, per job in submission order, the
-    (name, task count) of each stage it ran. A skipped stage (its
-    shuffle output was reused) completes no tasks and is left out; it
-    is also the first kind of stage the status store evicts."""
+    group (``traced_jobs``)."""
     # reliable checkpoints add one file-writing job per cut
     monkeypatch.delenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", raising=False)
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        r = solve_blocked(spark, n, **kw)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    # the status tracker is filled by a listener on Spark's event bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    tracker = sc.statusTracker()
-    jobs = []
-    for job_id in sorted(tracker.getJobIdsForGroup(group)):
-        stages = [tracker.getStageInfo(s) for s in sorted(tracker.getJobInfo(job_id).stageIds)]
-        jobs.append([(s.name, s.numTasks) for s in stages if s and s.numCompletedTasks > 0])
-    return r, jobs
+    return traced_jobs(spark, group, lambda: solve_blocked(spark, n, **kw))
 
 
 def test_one_block_job_and_task_budget(spark, monkeypatch):
@@ -187,7 +171,7 @@ def test_one_block_job_and_task_budget(spark, monkeypatch):
     assert r.num_iterations == 132
     chunks = -(-132 // 8)
     assert len(jobs) <= chunks + 3, jobs
-    assert all(tasks == 1 for job in jobs for _, tasks in job), jobs
+    assert all(tasks == 1 for _, stages in jobs for _, tasks in stages), jobs
 
 
 def test_multi_block_one_task_per_block(spark, monkeypatch):
@@ -202,6 +186,6 @@ def test_multi_block_one_task_per_block(spark, monkeypatch):
     assert r.num_iterations == 132
     chunks = -(-132 // 8)
     # the first job looks up the remap candidates' Murmur3 partitions
-    chunk_stages = [job[-1] for job in jobs[1:] if job[-1][0].startswith("collect at ")]
+    chunk_stages = [st[-1] for _, st in jobs[1:] if st[-1][0].startswith("collect at ")]
     assert len(chunk_stages) == chunks, jobs
     assert all(tasks == 3 for _, tasks in chunk_stages), chunk_stages

@@ -37,51 +37,20 @@ from pwir_zadanie_4_mapreduce_spark.operators.timeseries import (
 )
 from pwir_zadanie_4_mapreduce_spark.plans import metrics as PM
 
-CORRECTNESS_SF = "/root/testdata/sf0.01"
+from tests.conftest import CORRECTNESS_SF, session_conf
 
 BANDS = MINHASH_PERMS // MINHASH_BAND_ROWS
 
 
 @pytest.fixture()
-def no_broadcast(spark):
-    saved = {
-        k: spark.conf.get(k, None)
-        for k in (
-            "spark.sql.autoBroadcastJoinThreshold",
-            "spark.sql.adaptive.autoBroadcastJoinThreshold",
-        )
-    }
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    yield spark
-    for k, v in saved.items():
-        if v is not None:
-            spark.conf.set(k, v)
-        else:
-            # A conf that was unset before must be unset again —
-            # leaving e.g. adaptive.autoBroadcastJoinThreshold=-1 in
-            # the shared session would disable AQE broadcast
-            # conversion for every later test (order-dependent
-            # pollution; round-5 ADVICE).
-            spark.conf.unset(k)
-
-
-@pytest.fixture()
 def planned_broadcast_only(spark):
     """AQE's runtime broadcast conversion off, the session's static
-    threshold left as it is. The graph-round layout broadcasts its
-    vertex side only when the static threshold admits the initial
-    vertex table (functions/graph.py), so the graph loops' pins run
-    here rather than under ``no_broadcast``: they measure the layout
-    as planned, with no join re-planned by AQE after it ran."""
-    key = "spark.sql.adaptive.autoBroadcastJoinThreshold"
-    saved = spark.conf.get(key, None)
-    spark.conf.set(key, "-1")
-    yield spark
-    if saved is None:
-        spark.conf.unset(key)
-    else:
-        spark.conf.set(key, saved)
+    threshold left as it is. Pagerank decides its vertex broadcast
+    from the static threshold (functions/graph.py), so its pin runs
+    here rather than under ``no_broadcast``: it measures the layout as
+    planned, with no join re-planned by AQE after it ran."""
+    with session_conf(spark, {"spark.sql.adaptive.autoBroadcastJoinThreshold": "-1"}):
+        yield spark
 
 
 def _corpus_counts(spark):
@@ -306,27 +275,27 @@ def test_basket_lift_reuses_basket_frame(no_broadcast):
     assert out_rows > 0
 
 
-def test_cc_loop_round_is_shuffle_free(planned_broadcast_only):
+def test_cc_loop_round_is_shuffle_free(no_broadcast):
     """connected_components (r13 rewrite) claims ZERO shuffle exchanges
-    per loop round — the graph-round layout (functions/graph.py)
-    applied to min-label propagation: edges hash-partitioned by v once
-    and cached, the per-round label table broadcast onto them, the
-    v-keyed min-label re-aggregation riding the cache's partitioning,
-    and the own-label merge a second broadcast join. The r12 round
-    shape executed 3 exchanges per round (edge join + union agg;
-    measured 1943 records at sf0.1)."""
+    per loop round with the label side broadcast — the graph-round
+    layout (functions/graph.py) applied to min-label propagation:
+    edges hash-partitioned by v once and cached, the per-round label
+    table broadcast onto them, the v-keyed min-label re-aggregation
+    riding the cache's partitioning, and the own-label merge a second
+    broadcast join. The r12 round shape executed 3 exchanges per round
+    (edge join + union agg; measured 1943 records at sf0.1). It runs
+    under the no_broadcast fixture with the broadcast side passed in,
+    so only ``_cc_round``'s explicit hints can plan a broadcast: a
+    round that drops them fails here."""
     from pyspark.sql import functions as F
 
     from pwir_zadanie_4_mapreduce_spark.functions.graph import VertexSide
     from pwir_zadanie_4_mapreduce_spark.operators.dedup import _cc_round
 
-    spark = planned_broadcast_only
+    spark = no_broadcast
     try:
-        # a local relation, not createDataFrame's RDD: the optimizer
-        # sizes an RDD at defaultSizeInBytes, which no threshold admits
-        pairs = spark.sql(
-            "SELECT CAST(a AS BIGINT) a, CAST(b AS BIGINT) b"
-            " FROM VALUES (1, 2), (2, 3), (5, 6), (8, 9) AS t(a, b)"
+        pairs = spark.createDataFrame(
+            [(1, 2), (2, 3), (5, 6), (8, 9)], "a: long, b: long"
         )
         edges = pairs.select(
             F.col("a").alias("u"), F.col("b").alias("v")
@@ -337,10 +306,8 @@ def test_cc_loop_round_is_shuffle_free(planned_broadcast_only):
             .select("node", F.col("node").alias("label"))
             .localCheckpoint()  # like the real loop: labels sit behind a cut
         )
-        side = VertexSide.of(labels)
-        assert side.broadcast
-        ev = side.edges(edges, join_key="u", group_key="v")
-        ev.count()  # build the cache (the one-time |E| repartition)
+        side = VertexSide(broadcast=True)
+        ev = side.edges(edges, join_key="u", group_key="v")  # builds the cache
         out = _cc_round(ev, labels, side)
         rows = out.collect()
         assert {(r["node"], r["label"]) for r in rows} == {

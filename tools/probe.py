@@ -13,11 +13,14 @@ Each ``--sf`` dir (default ``catalog.DEFAULT_SF_DIR``, which
 every round runs each (sf, query, arm) once, in that order, so host
 drift hits every cell alike — the only way to resolve deltas under
 20% on a host whose throughput swings between windows (BASELINE.md).
+The arms swap places every other round: a query's second run in a
+row measured up to 2x faster than its first with identical code.
 Every run first releases the session's storage
 (``session.release_storage``) and is timed through a noop write. The
-probe prints each cell's runs and their min; with two or more ``--sf``
-dirs, also each (query, arm)'s log10 time ratio over the last step
-(1.0 = linear in rows for a 10x step, below 1 sublinear).
+probe prints each cell's runs, their min and their median; with two
+or more ``--sf`` dirs, also each (query, arm)'s log10 time ratio over
+the last step (1.0 = linear in rows for a 10x step, below 1
+sublinear).
 
 Arms: ``new`` is the working tree. ``--ref`` adds ``old``, the
 queries of ``git archive GIT_REF`` imported from a temp tree. The old
@@ -36,6 +39,7 @@ from __future__ import annotations
 import argparse
 import math
 import os
+import statistics
 import subprocess
 import sys
 import tempfile
@@ -126,10 +130,11 @@ def main(argv: list[str] | None = None) -> int:
             if args.rounds > 0:
                 run(arms["new"], "q1_pricing_summary", sf_dirs[0])  # warm-up
             runs: dict[tuple[str, str, str], list[float]] = {}
-            for _ in range(args.rounds):
+            for r in range(args.rounds):
                 for sf_dir in sf_dirs:
                     for name in args.queries:
-                        for arm, qs in arms.items():
+                        order = list(arms.items())
+                        for arm, qs in order if r % 2 == 0 else order[::-1]:
                             t = run(qs, name, sf_dir)
                             runs.setdefault((name, sf_dir, arm), []).append(t)
         finally:
@@ -138,7 +143,8 @@ def main(argv: list[str] | None = None) -> int:
     for (name, sf_dir, arm), ts in runs.items():
         print(
             f"{name} {os.path.basename(sf_dir)} {arm}: "
-            f"runs={[round(t, 3) for t in ts]} min={min(ts):.3f}"
+            f"runs={[round(t, 3) for t in ts]} min={min(ts):.3f} "
+            f"median={statistics.median(ts):.3f}"
         )
     if len(sf_dirs) >= 2 and runs:
         prev, last = sf_dirs[-2:]

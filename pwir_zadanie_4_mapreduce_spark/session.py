@@ -13,6 +13,13 @@ chosen to also be the right call on a 1000-executor cluster reading
 - shuffle partitions sized to cores locally; at cluster scale this is
   overridden per-job (or left to AQE's coalescing with a high initial
   count).
+- Python workers fork from ``worker_daemon`` instead of
+  ``pyspark.daemon``: it drops the ``.zip``/``.jar`` entries of the
+  workers' path whose packages all import unpacked at the same version,
+  so the ``importlib.invalidate_caches()`` PySpark runs for every task
+  has no zipimporter left to re-read (about 0.17 s per task before). An
+  archive that is the only source of a package, or carries another
+  version, stays, and the daemon is then PySpark's own.
 """
 
 from __future__ import annotations
@@ -20,6 +27,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+from pwir_zadanie_4_mapreduce_spark import worker_daemon
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -75,6 +84,7 @@ def build_session(
         # per-row stages — catalog.spread(), used by the shingling /
         # signature / Arrow-decode operators.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.daemon.module", worker_daemon.__name__)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

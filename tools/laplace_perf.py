@@ -3,6 +3,8 @@
 
 Usage: python tools/laplace_perf.py N [sweeps_per_job] [cpus] [--blocks NB]
 
+``cpus`` defaults to ``session.DEFAULT_CPUS`` (``$SPARK_GRAFT_CPUS``).
+
 Runs ``laplace_blocked.solve_blocked``; ``--blocks`` overrides its
 block-count heuristic (the BASELINE.md rows at N >= 1024 used explicit
 counts). Prints the reference-format stats line plus job/chunk
@@ -29,9 +31,9 @@ def main() -> None:
         del args[i : i + 2]
     n = int(args[0])
     sweeps = int(args[1]) if len(args) > 1 else 128
-    cpus = int(args[2]) if len(args) > 2 else int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(args[2]) if len(args) > 2 else None
 
-    from pwir_zadanie_4_mapreduce_spark.session import build_session
+    from pwir_zadanie_4_mapreduce_spark.session import DEFAULT_CPUS, build_session
     from pwir_zadanie_4_mapreduce_spark import laplace
     from pwir_zadanie_4_mapreduce_spark.laplace_blocked import solve_blocked
 
@@ -48,7 +50,7 @@ def main() -> None:
     jobs = len(sc.statusTracker().getJobIdsForGroup("laplace-perf"))
     laplace.print_stats(res, file=sys.stdout)
     print(
-        f"config: N={n} sweeps_per_job={sweeps} cpus={cpus} "
+        f"config: N={n} sweeps_per_job={sweeps} cpus={cpus or DEFAULT_CPUS} "
         f"chunks~={(res.num_iterations + sweeps - 1) // sweeps} jobs={jobs} "
         f"s_per_iter={res.duration_s / max(1, res.num_iterations):.4f}"
     )

@@ -16,11 +16,11 @@ blocking* optimization to the Spark execution model:
 - a *chunk* of ``k`` sweeps ships each block its rows plus a
   ``2k``-row halo on each side (one red-black sweep has data
   dependency radius 2: phase 1 reads phase 0's values one row away,
-  which read rows two away), via a single explode → hash shuffle into
-  exactly ``nb`` partitions on a remapped key precomputed so each
-  block lands in its own partition — one Python task per block, none
-  empty. With one block there is no halo to ship and no shuffle: the
-  chunk is a narrow map over the one-partition grid;
+  which read rows two away), via a single explode → ``repartitionById``
+  into exactly ``nb`` partitions, block ``b`` to partition ``b`` (the
+  rank-addressed scatter, laplace-par.c:307-337) — one Python task per
+  block, none empty. With one block there is no halo to ship and no
+  shuffle: the chunk is a narrow map over the one-partition grid;
 - each block then runs all ``k`` sweeps locally in vectorized numpy
   inside ``mapInArrow`` (one dense-plane kernel for every N, odd or
   even) — zero communication for k sweeps. Halo
@@ -218,14 +218,13 @@ def _chunk_kernel(n: int, omega: float, k: int, rows_per_block: int):
 
     Each task's partition holds one block (plus halo) by construction —
     a one-block grid is one partition, and otherwise the solver
-    hash-repartitions into one partition per block on a remapped key
-    chosen so every block's Murmur3 partition is distinct (see
+    repartitions by id, block ``b`` into partition ``b`` (see
     solve_blocked), unlike hash-groupBy where the birthday paradox
     routinely co-locates two blocks in one task and doubles the
-    chunk's wall time (measured:
-    N=2048 nb=8 on 32 shuffle partitions, 196→115 s after the fix).
-    The kernel still loops over the b values it receives, so
-    correctness never depends on the 1:1 placement.
+    chunk's wall time (measured: N=2048 nb=8 on 32 shuffle
+    partitions, 196→115 s with one block per task). The kernel still
+    loops over the b values it receives, so correctness never depends
+    on the 1:1 placement.
 
     mapInArrow, not mapInPandas (round-5 rewrite): the grid dominates
     the per-chunk payload, and pandas conversion materialized every
@@ -241,7 +240,7 @@ def _chunk_kernel(n: int, omega: float, k: int, rows_per_block: int):
         import pyarrow as pa
 
         tables = [pa.Table.from_batches([b]) for b in batches]
-        if not tables:  # hash partitioning may leave a partition empty
+        if not tables:
             return
         tbl = pa.concat_tables(tables).combine_chunks()
         if tbl.num_rows == 0:
@@ -307,9 +306,8 @@ def solve_blocked(
     small N this honestly collapses toward one block — the distributed
     path is exercised explicitly in tests via ``num_blocks``.
 
-    Jobs: one eager cut of the initial grid (plus the remap's candidate
-    job when there is more than one block), then per chunk the max-diff
-    collect — plus the halo exchange's shuffle-map job when
+    Jobs: one eager cut of the initial grid, then per chunk the
+    max-diff collect — plus the halo exchange's shuffle-map job when
     ``nb > 1`` — and one eager cut for a mid-chunk convergence redo.
     Every chunk stage runs exactly ``nb`` tasks.
     """
@@ -325,72 +323,6 @@ def solve_blocked(
     rows_per_block = -(-n // num_blocks)  # ceil
     nb = -(-n // rows_per_block)  # effective block count
 
-    # One block per task, deterministically: hash-repartition into
-    # exactly nb partitions on a remapped key chosen (once per solve,
-    # one tiny job) so each block's Murmur3 partition is distinct —
-    # the remap is then a permutation of the nb partitions, and every
-    # chunk launches nb Python tasks, none of them empty (an empty
-    # Python task still pays the worker's per-task setup, ~0.2 s on a
-    # 4-core host with PySpark 4.1). groupBy/hash on b itself loses
-    # the birthday lottery routinely (two blocks in one task = 2×
-    # chunk wall time, measured at N=2048 nb=8); repartitionByRange
-    # fixes placement but adds a boundary-sampling job per chunk and
-    # still co-located blocks at small nb. With one block the chunk
-    # needs no exchange at all (see run_chunk).
-    remap = {b: b for b in range(nb)}
-    if nb > 1:
-        # Lazily widen the candidate pool: 64 keys per block usually
-        # suffice, but if every candidate's Murmur3 partition is taken
-        # we fetch the next 64·nb keys (some partition is always free
-        # while a block is unplaced; only the candidate-key supply is
-        # finite) instead of silently co-locating two blocks — the 2×
-        # chunk-wall-time failure the remap exists to prevent.
-        part_of: dict[int, int] = {}
-
-        def fetch_candidates(lo: int, hi: int) -> None:
-            rows = spark.range(lo, hi).select(
-                F.col("id").cast("int").alias("c"),
-                F.pmod(F.hash(F.col("id").cast("int")), F.lit(nb)).alias("p"),
-            ).collect()
-            part_of.update({row["c"]: row["p"] for row in rows})
-
-        fetch_candidates(0, nb * 64)
-        t_max = 64
-        used: set[int] = set()
-        for b in range(nb):
-            placed = False
-            t = 0
-            while not placed:
-                while t < t_max:
-                    c = b + t * nb
-                    if part_of[c] not in used:
-                        remap[b] = c
-                        used.add(part_of[c])
-                        placed = True
-                        break
-                    t += 1
-                if not placed:
-                    if t_max >= 4096:
-                        break
-                    fetch_candidates(nb * t_max, nb * t_max * 2)
-                    t_max *= 2
-            # the last block hits its one free partition with
-            # probability 1/nb per try: 4096 tries leave a miss
-            # chance of (1 - 1/nb)^4096, below 1e-17 up to nb = 100
-            if not placed:
-                import logging
-
-                logging.getLogger(__name__).warning(
-                    "block %d: no collision-free partition among %d "
-                    "candidate keys; sharing a task with another block "
-                    "(chunk wall time may double)", b, t_max,
-                )
-                used.add(part_of[b])
-    remap_expr = F.col("b")
-    for b, c in remap.items():
-        if c != b:
-            remap_expr = F.when(F.col("b") == b, F.lit(c)).otherwise(remap_expr)
-
     def fan_out(rows: DataFrame, k: int) -> DataFrame:
         halo = 2 * k
         i = F.col("i")
@@ -404,7 +336,10 @@ def solve_blocked(
         schema = "i int, vals array<double>, diffs array<double>"
         blocks = fan_out(rows, k)
         if nb > 1:
-            blocks = blocks.withColumn("pk", remap_expr.cast("int")).repartition(nb, "pk")
+            # block b to partition b of exactly nb: nb Python tasks, none
+            # empty (an empty one still pays the worker's per-task setup);
+            # repartitionByRange would add a boundary-sampling job per chunk
+            blocks = blocks.repartitionById(nb, "b")
         # else: the fan-out is the identity (b = 0 for every row) and
         # the grid is already one partition — a narrow map, no exchange
         return blocks.mapInArrow(_chunk_kernel(n, omega, k, rows_per_block), schema=schema)

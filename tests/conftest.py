@@ -48,7 +48,7 @@ def spark():
 
     warehouse = tempfile.mkdtemp(prefix="pwir_warehouse_")
     spark = build_session(
-        cpus=int(os.environ.get("SPARK_GRAFT_TEST_CPUS", "8")),
+        cpus=None,
         extra_conf={"spark.sql.warehouse.dir": warehouse},
     )
     yield spark

@@ -2,7 +2,7 @@
 
 Gated behind PWIR_CHAOS=1: it boots a multi-JVM local-cluster in a
 subprocess (own session, so it can never collide with the suite's
-local[8] fixture), SIGKILLs an executor JVM mid-query, and
+local[SPARK_GRAFT_CPUS] fixture), SIGKILLs an executor JVM mid-query, and
 hash-compares against an undisturbed baseline. ~3-5 min.
 
 The committed evidence from running this harness is CHAOS_r10.json

@@ -14,12 +14,13 @@ test N the sizing heuristic would otherwise collapse to one block.
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from pwir_zadanie_4_mapreduce_spark import laplace
 from pwir_zadanie_4_mapreduce_spark.laplace_blocked import solve_blocked
 from pwir_zadanie_4_mapreduce_spark.session import pinned_rdds
 
-from tests.conftest import traced_jobs
+from tests.conftest import session_conf, traced_jobs
 from tests.test_laplace import GOLDEN_N4, GOLDEN_N8, GOLDEN_STATS, solve_scalar
 
 
@@ -175,17 +176,37 @@ def test_one_block_job_and_task_budget(spark, monkeypatch):
 
 
 def test_multi_block_one_task_per_block(spark, monkeypatch):
-    """Three blocks: the halo exchange targets exactly 3 partitions, so
-    each chunk's mapInArrow stage — the result stage of its max-diff
-    collect — runs one task per block and no empty Python task. The
-    session's shuffle.partitions (not 3) would otherwise set the width."""
-    assert int(spark.conf.get("spark.sql.shuffle.partitions")) != 3
-    r, jobs = _solve_traced(
-        spark, monkeypatch, "laplace-budget-3", 16, num_blocks=3, sweeps_per_job=8
-    )
-    assert r.num_iterations == 132
-    chunks = -(-132 // 8)
-    # the first job looks up the remap candidates' Murmur3 partitions
-    chunk_stages = [st[-1] for _, st in jobs[1:] if st[-1][0].startswith("collect at ")]
-    assert len(chunk_stages) == chunks, jobs
-    assert all(tasks == 3 for _, tasks in chunk_stages), chunk_stages
+    """Fewer blocks than shuffle partitions (3 at 4), and more (5 at
+    4): the halo exchange sends block b to partition b of exactly nb,
+    so each chunk's mapInArrow stage — the result stage of its max-diff
+    collect — runs one task per block, each on its own block, and no
+    empty Python task.
+
+    The solve's jobs, in order: the initial cut; per chunk the
+    exchange's shuffle-map job and the collect; on a mid-chunk
+    convergence (both cases here) the redo's shuffle-map job and cut.
+    Nothing runs before the initial cut."""
+    for n, num_blocks, k, iterations in [(16, 3, 8, 132), (20, 5, 16, 183)]:
+        with session_conf(spark, {"spark.sql.shuffle.partitions": "4"}):
+            r, jobs = _solve_traced(
+                spark, monkeypatch, f"laplace-budget-{num_blocks}", n,
+                num_blocks=num_blocks, sweeps_per_job=k,
+            )
+        assert r.num_iterations == iterations
+        chunks = -(-iterations // k)
+        kinds = [
+            "cut" if name.startswith("localCheckpoint at ")
+            else "collect" if name.startswith("collect at ")
+            else "map"
+            for name, _ in jobs
+        ]
+        redo = ["map", "cut"] if iterations % k else []
+        assert kinds == ["cut"] + ["map", "collect"] * chunks + redo, jobs
+        chunk_stages = [st[-1] for (_, st), kind in zip(jobs, kinds) if kind == "collect"]
+        assert all(tasks == num_blocks for _, tasks in chunk_stages), chunk_stages
+        # block b's owned rows come out of partition b
+        rows_per_block = -(-n // num_blocks)
+        placed = r.grid.select(F.spark_partition_id().alias("p"), "i").distinct().collect()
+        assert {(row["p"], row["i"] // rows_per_block) for row in placed} == {
+            (b, b) for b in range(num_blocks)
+        }

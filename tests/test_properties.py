@@ -192,3 +192,37 @@ def test_connected_components_both_algorithms_match_union_find(spark, edges):
     }
     assert got_prop == want
     assert got_star == want
+
+
+@st.composite
+def _laplace_cases(draw):
+    """Small solves of a few chunks: odd and even n, 1-4 blocks, and
+    chunks of up to 6 sweeps, whose 2k-row halo is wider than any
+    block here; the cap may stop mid-chunk, and the smallest grids
+    converge inside it (a mid-chunk redo or a chunk end)."""
+    n = draw(st.integers(min_value=2, max_value=11))
+    num_blocks = draw(st.integers(min_value=1, max_value=4))
+    k = draw(st.integers(min_value=1, max_value=6))
+    max_iterations = draw(st.integers(min_value=1, max_value=3 * k))
+    return n, num_blocks, k, max_iterations
+
+
+@given(case=_laplace_cases())
+@settings(
+    max_examples=12,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+def test_laplace_blocked_bit_equal_to_scalar(spark, case):
+    """Block count, chunk size and iteration cap are execution knobs:
+    every combination is bit-equal to the C loop's transliteration
+    (grid doubles, iteration count, final diff)."""
+    from pwir_zadanie_4_mapreduce_spark.laplace_blocked import solve_blocked
+
+    from tests.test_laplace_blocked import _assert_matches_scalar
+
+    n, num_blocks, k, max_iterations = case
+    r = solve_blocked(
+        spark, n, num_blocks=num_blocks, sweeps_per_job=k, max_iterations=max_iterations
+    )
+    _assert_matches_scalar(r, n, max_iterations=max_iterations)

@@ -77,6 +77,33 @@ def _pid_alive(pid: int) -> bool:
         return True
 
 
+def _n_commits(ckpt_dir: str) -> int:
+    """Micro-batches a streaming query has committed to ``ckpt_dir``."""
+    d = os.path.join(ckpt_dir, "commits")
+    if not os.path.isdir(d):
+        return 0
+    return sum(1 for f in os.listdir(d) if not f.startswith("."))
+
+
+def chaos_session(app_name: str):
+    """The session every chaos tool runs in: the engine's own
+    (``build_session``: worker daemon, executor PYTHONPATH) on a
+    2-worker local-cluster, so there are real executor JVMs to kill.
+    Executor loss is the experiment, so task and stage retries are
+    raised: the dying executor's failed tasks must not abort the app."""
+    from pwir_zadanie_4_mapreduce_spark.session import build_session
+
+    return build_session(
+        app_name=app_name,
+        cpus=8,
+        extra_conf={
+            "spark.master": "local-cluster[2,4,1536]",
+            "spark.task.maxFailures": "8",
+            "spark.stage.maxConsecutiveAttempts": "8",
+        },
+    )
+
+
 def chaos_run(spark, qfn, sf_dir: str, app_id: str, baseline_s: float, kills: int = 1) -> dict:
     """Run ``qfn`` while killing one executor MID-ITERATION: the kill
     fires once ≥3 Spark jobs of this run have been submitted (the
@@ -169,20 +196,7 @@ def main(argv: list[str]) -> int:
     else:
         os.environ.pop("SPARK_GRAFT_RELIABLE_CHECKPOINT", None)
 
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master("local-cluster[2,4,1536]")
-        .appName(f"chaos-{args.mode}")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.adaptive.enabled", "true")
-        # executor loss is the EXPERIMENT — don't let one blacklist-style
-        # failure of the dying executor's tasks abort the app
-        .config("spark.task.maxFailures", "8")
-        .config("spark.stage.maxConsecutiveAttempts", "8")
-        .getOrCreate()
-    )
+    spark = chaos_session(f"chaos-{args.mode}")
     app_id = spark.sparkContext.applicationId
     import __spark_entry__ as e
 

@@ -29,7 +29,6 @@ import argparse
 import json
 import os
 import signal
-import subprocess
 import sys
 import tempfile
 import threading
@@ -53,35 +52,9 @@ except ModuleNotFoundError:
             _PB_SHIM + os.pathsep + os.environ.get("PYTHONPATH", "")
         )
 
+from tools.chaos_kill import _executor_pids, _n_commits, _pid_alive, chaos_session  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_CHAOS_SF", "/root/testdata/sf0.01")
-
-
-def _executor_pids(app_id: str) -> list[int]:
-    out = subprocess.run(
-        ["ps", "-eo", "pid,args"], capture_output=True, text=True
-    ).stdout
-    pids = []
-    for line in out.splitlines():
-        if "CoarseGrainedExecutorBackend" in line and app_id in line:
-            pids.append(int(line.strip().split(None, 1)[0]))
-    return sorted(pids)
-
-
-def _pid_alive(pid: int) -> bool:
-    try:
-        os.kill(pid, 0)
-        return True
-    except ProcessLookupError:
-        return False
-    except PermissionError:
-        return True
-
-
-def _n_commits(ckpt_dir: str) -> int:
-    d = os.path.join(ckpt_dir, "commits")
-    if not os.path.isdir(d):
-        return 0
-    return sum(1 for f in os.listdir(d) if not f.startswith("."))
 
 
 def _totals(spark, rows_dir: str) -> dict:
@@ -107,19 +80,9 @@ def main(argv: list[str]) -> int:
     ap.add_argument("--out")
     args = ap.parse_args(argv)
 
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    spark = (
-        SparkSession.builder.master("local-cluster[2,4,1536]")
-        .appName("chaos-stream")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.shuffle.partitions", "8")
-        # executor loss is the EXPERIMENT
-        .config("spark.task.maxFailures", "8")
-        .config("spark.stage.maxConsecutiveAttempts", "8")
-        .getOrCreate()
-    )
+    spark = chaos_session("chaos-stream")
     app_id = spark.sparkContext.applicationId
 
     from pwir_zadanie_4_mapreduce_spark.catalog import load_table

@@ -192,7 +192,7 @@ def main(argv: list[str]) -> int:
     names = argv or (sorted(queries) if out_path else sorted(oracles))
     results: dict[str, dict] = {}
 
-    spark = build_session(cpus=int(os.environ.get("SPARK_GRAFT_TEST_CPUS", "16")))
+    spark = build_session(cpus=None)
     con = duckdb.connect()
     # Bound the oracle's memory so big-SF sweeps SPILL instead of
     # OOM-killing the whole shard (r11: a shingle-pair oracle at sf10

@@ -230,7 +230,7 @@ def main() -> int:
     norms = np.array([fold_norm(v) for v in V])
     print(f"loaded {len(ids)} vectors from {args.sf_dir}")
 
-    spark = build_session(cpus=int(os.environ.get("SPARK_GRAFT_TEST_CPUS", "12")))
+    spark = build_session(cpus=None)
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()

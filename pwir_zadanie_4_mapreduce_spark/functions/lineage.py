@@ -26,6 +26,7 @@ The cost delta is one write+read of the cut frame per cut (measured in
 SCALE.md).
 
 Call sites keep chain style via ``.transform(cut_lineage)``.
+``cut_rdd`` is the same switch for an RDD (the Laplace solver's grid).
 """
 
 from __future__ import annotations
@@ -35,6 +36,7 @@ import os
 import shutil
 import tempfile
 
+from pyspark import RDD, SparkContext, StorageLevel
 from pyspark.sql import DataFrame
 
 _CONFIGURED_APPS: set[str] = set()
@@ -44,9 +46,7 @@ def reliable_checkpoints_enabled() -> bool:
     return os.environ.get("SPARK_GRAFT_RELIABLE_CHECKPOINT", "") not in ("", "0")
 
 
-def _ensure_checkpoint_dir(df: DataFrame) -> None:
-    spark = df.sparkSession
-    sc = spark.sparkContext
+def _ensure_checkpoint_dir(sc: SparkContext) -> None:
     app = sc.applicationId
     if app in _CONFIGURED_APPS:
         return
@@ -71,6 +71,23 @@ def cut_lineage(df: DataFrame, eager: bool = False) -> DataFrame:
     a second job once that action finishes, recomputing the cut frame
     from its last exchange (or its scan)."""
     if reliable_checkpoints_enabled():
-        _ensure_checkpoint_dir(df)
+        _ensure_checkpoint_dir(df.sparkSession.sparkContext)
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+def cut_rdd(rdd: RDD) -> None:
+    """Mark ``rdd`` to cut its lineage when its first job computes it:
+    ``localCheckpoint`` by default; with
+    SPARK_GRAFT_RELIABLE_CHECKPOINT=1, persist plus ``checkpoint()``,
+    so the second job that writes the files reads the stored blocks
+    instead of recomputing ``rdd``. Both are lazy, and neither stops
+    PySpark from pipelining the Python function that computes ``rdd``
+    into a later ``map``: read the cut through a fresh ``RDD`` over
+    ``rdd._jrdd``."""
+    if reliable_checkpoints_enabled():
+        _ensure_checkpoint_dir(rdd.context)
+        rdd.persist(StorageLevel.MEMORY_AND_DISK)
+        rdd.checkpoint()
+    else:
+        rdd.localCheckpoint()

@@ -7,9 +7,6 @@ is :func:`.laplace_blocked.solve_blocked`).
   calls as the reference;
 - the result type ``LaplaceResult``: the final grid ``(i, j, v)``,
   iteration count, final max |Δ| and the stats-line timings;
-- the checkpoint ledger: ``checkpoint_tracked`` cuts a grid's lineage
-  and records the RDDs it pinned, ``release_checkpoints`` frees them,
-  so a solve holds one live grid at a time;
 - the sinks: ``format_grid`` (the ordered ``%.10f`` grid dump,
   laplace-seq.c:99-111) and ``print_stats`` (the stats line).
 """
@@ -20,47 +17,7 @@ import math
 import sys
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
-
-from pwir_zadanie_4_mapreduce_spark.session import pinned_rdds
-
-
-def checkpoint_tracked(df: DataFrame, eager: bool = True) -> tuple[DataFrame, set[int]]:
-    """``localCheckpoint`` plus the IDs of the RDDs it persisted, so the
-    chunk loop can free the PREVIOUS chunk's grid once the next one has
-    materialized. Without this, storage grows by one N×N grid per chunk
-    within a single solve (~0.5 GB/chunk at N=8192) — a solve must hold
-    exactly one live grid, like the reference's two malloc'd buffers
-    (laplace-seq.c:166-170).
-
-    ``eager=True`` materializes the cut on return (one count job).
-    ``eager=False`` only marks it: the RDD is registered for storage
-    at once, so the returned IDs are the same, but its blocks are
-    filled by the first action that reads every partition — the caller
-    must run that action before releasing the frame the cut reads
-    from. Under AQE a lazy cut over a plan with an exchange still runs
-    the shuffle-map stage at call time (see functions/lineage.py)."""
-    from pwir_zadanie_4_mapreduce_spark.functions.lineage import cut_lineage
-
-    spark = df.sparkSession
-    before = set(pinned_rdds(spark))
-    # Reliable mode (see functions/lineage.py) writes checkpoint FILES
-    # instead of blocks — the id diff is then empty and per-chunk
-    # cleanup is the checkpoint dir's (old grids cost disk, not
-    # executor memory).
-    out = cut_lineage(df, eager=eager)
-    return out, set(pinned_rdds(spark)) - before
-
-
-def release_checkpoints(spark: SparkSession, ids: set[int]) -> None:
-    """Free the block storage of earlier ``checkpoint_tracked`` grids.
-
-    Non-blocking unpersist; only IDs recorded by ``checkpoint_tracked``
-    are touched, so persisted frames owned by other operators in the
-    same session are never evicted."""
-    for rdd_id, rdd in pinned_rdds(spark).items():
-        if rdd_id in ids:
-            rdd.unpersist(False)
+from pyspark.sql import DataFrame
 
 
 def get_omega(n: int) -> float:
@@ -82,13 +39,14 @@ class LaplaceResult:
     omega: float
     epsilon: float
     duration_s: float
-    # Cumulative wall time of the per-chunk max-diff collects — the
-    # analog of the reference's `breakdown` accumulator, which sums the
-    # time the parallel program spends in MPI exchange/reduce
-    # (laplace-par.c:177,391-392, printed at :541). The collect is also
-    # the job that computes the chunk (it fills the chunk's lazy cut),
-    # so this includes the sweeps themselves: everything but the halo
-    # exchange's shuffle-map job, which runs when the cut is made.
+    # Cumulative wall time of the per-chunk rounds, the mid-chunk redo
+    # excluded, from building the round to its per-sweep maxima on the
+    # driver — the analog of the reference's `breakdown` accumulator,
+    # which sums the time the parallel program spends in MPI
+    # exchange/reduce (laplace-par.c:177,391-392, printed at :541). A
+    # round's one job also runs the halo shuffle and the sweeps
+    # themselves, so this is nearly all of duration_s: it leaves out
+    # the redo and the driver's own work between rounds.
     breakdown_s: float = 0.0
 
 

@@ -2,39 +2,48 @@
 
 Bit-faithful to the reference loop (laplace-seq.c:184-209): the
 same iteration count, same final max |Δ|, the same doubles in every
-cell. Its parameters, result type, checkpoint ledger and sinks live in
-:mod:`.laplace`. A red-black sweep needs a halo exchange after each of
-its two color phases (laplace-par.c:120-129); on Spark each exchange
-is a shuffle and a stage, with a fixed scheduling cost whatever the
-grid size. This module applies the standard HPC *ghost-zone / temporal
-blocking* optimization to the Spark execution model:
+cell. Its parameters, result type and sinks live in :mod:`.laplace`.
+A red-black sweep needs a halo exchange after each of its two color
+phases (laplace-par.c:120-129); on Spark each exchange is a shuffle
+and a stage, with a fixed scheduling cost whatever the grid size.
+This module applies the standard HPC *ghost-zone / temporal blocking*
+optimization to the Spark execution model:
 
-- the grid state is ROW-oriented: one DataFrame row per grid row
-  ``(i, vals: array<double>[N])`` — a 1-D row-block decomposition,
-  exactly the reference's scatter (laplace-par.c:245-251), with the
-  row as the unit of exchange;
-- a *chunk* of ``k`` sweeps ships each block its rows plus a
-  ``2k``-row halo on each side (one red-black sweep has data
+- the grid state is an RDD of row BLOCKS, one element
+  ``(b, i0, rows)`` per block: block ``b`` owns the grid rows
+  ``[i0, i0 + len(rows))``, held as one float64 ndarray in partition
+  ``b`` — a 1-D row-block decomposition, exactly the reference's
+  scatter (laplace-par.c:245-251). numpy makes the initial blocks
+  (getInitialValue, laplace-common-impl.h:11-33) inside the first
+  round's tasks, so the initial grid runs no job of its own;
+- a *chunk* of ``k`` sweeps (one round) ships each block its rows plus
+  a ``2k``-row halo on each side (one red-black sweep has data
   dependency radius 2: phase 1 reads phase 0's values one row away,
-  which read rows two away), via a single explode → ``repartitionById``
-  into exactly ``nb`` partitions, block ``b`` to partition ``b`` (the
-  rank-addressed scatter, laplace-par.c:307-337) — one Python task per
-  block, none empty. With one block there is no halo to ship and no
-  shuffle: the chunk is a narrow map over the one-partition grid;
+  which read rows two away): a ``flatMap`` cuts each block into the
+  row slices its neighbors need and ``partitionBy(nb, b ↦ b)`` sends
+  block ``b``'s slices to partition ``b`` (the rank-addressed
+  scatter, laplace-par.c:307-337) — one Python task per block, none
+  empty. With one block there is no halo to ship and no shuffle: the
+  round is a narrow ``mapPartitions``;
 - each block then runs all ``k`` sweeps locally in vectorized numpy
-  inside ``mapInArrow`` (one dense-plane kernel for every N, odd or
-  even) — zero communication for k sweeps. Halo
-  rows go stale one dependency-radius per sweep, but the owned rows
-  sit ``>= 2k`` rows from any missing edge, so after k sweeps every
-  owned row is *exactly* the value the sequential program computes;
+  (one dense-plane kernel for every N, odd or even) — zero
+  communication for k sweeps. Halo rows go stale one
+  dependency-radius per sweep, but the owned rows sit ``>= 2k`` rows
+  from any missing edge, so after k sweeps every owned row is
+  *exactly* the value the sequential program computes;
 - per-sweep global max-|Δ| (the MPI_Allreduce(MAX) analog,
-  laplace-par.c:504) falls out for free: each phase updates a
-  disjoint color set, owned cells are valid at every intermediate
-  sweep, so the block-local owned-row maxima reduce to the exact
-  global maximum with one tiny collect per chunk. The chunk's
-  lineage cut is lazy and that collect, which reads every partition,
-  fills it — so a chunk is ONE job (plus the shuffle-map job of the
-  halo exchange when ``nb > 1``), not a cut job and then a collect.
+  laplace-par.c:504): each phase updates a disjoint color set and
+  owned cells are valid at every intermediate sweep, so the
+  block-local owned-row maxima reduce to the exact global maximum.
+  They reach the driver through a fresh accumulator per round whose
+  merge is elementwise max — order-free and idempotent, so a
+  recomputed partition cannot change the result;
+- the round's output is cut (``functions.lineage.cut_rdd``) and the
+  round's only action is a JVM-side count over that cut: it computes
+  the round, fills the cut and delivers the maxima, so a round is ONE
+  job (one stage, two with the halo shuffle). The next round reads the
+  cut through a fresh ``RDD`` over its JVM handle, so PySpark cannot
+  pipeline this round's kernel into the next one's task.
 
 Communication drops from ``2·iters`` exchanges (one per color phase)
 to ``iters/k`` — with the fan-out factor ``1 + 4k/rows_per_block`` as
@@ -50,59 +59,28 @@ opposite color (laplace-seq.c:190-199), so the phase is
 order-independent and elementwise numpy evaluation with the same
 association — ``((up + down) + left) + right``, ``/ 4.0``, then
 ``(1-ω)·v + ω·tmp`` — produces bit-identical doubles.
+
+Every function a task runs is built inside a function (``<locals>``
+qualname), so cloudpickle ships it by value: Python workers of a
+driver-built session created from an arbitrary cwd cannot import this
+package — the repo-wide worker-closure convention (multimodal.py:52).
 """
 
 from __future__ import annotations
 
-import math
 import time
 
-import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark import RDD
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from .laplace import (
-    LaplaceResult,
-    checkpoint_tracked,
-    get_epsilon,
-    get_omega,
-    release_checkpoints,
-)
-
-
-def make_grid_rows(spark: SparkSession, n: int, num_partitions: int) -> DataFrame:
-    """O1 generate source, row-oriented: ``(i, vals[N])`` per grid row
-    with the Dirichlet boundaries of laplace-common-impl.h:11-33 (the
-    when-chain keeps the C else-if precedence: corners take the row
-    value). ``spark.range`` splits the rows into ``num_partitions``
-    contiguous slices — a 1-D row-block decomposition with no
-    exchange."""
-    return spark.range(0, n, 1, num_partitions).select(
-        F.col("id").cast("int").alias("i"),
-        F.transform(
-            F.sequence(F.lit(0), F.lit(n - 1)), lambda jj: cell_expr(jj, n)
-        ).alias("vals"),
-    )
-
-
-def cell_expr(j, n: int):
-    """getInitialValue as a column expression over (i, j)."""
-    return (
-        F.when(F.col("i") == 0, F.lit(4.56))
-        .when(F.col("i") == n - 1, F.lit(9.85))
-        .when(j == 0, F.lit(7.32))
-        .when(j == n - 1, F.lit(6.88))
-        .otherwise(F.lit(0.0))
-        .cast("double")
-    )
+from .functions.lineage import cut_rdd
+from .laplace import LaplaceResult, get_epsilon, get_omega
 
 
 def _sweeps_factory():
-    """Factory wrapper so the sweep function cloudpickles BY VALUE
-    (its qualname is under ``<locals>`` and cannot be resolved by
-    reference): Python workers of a driver-built session created from
-    an arbitrary cwd cannot import this package — the repo-wide worker
-    -closure convention (multimodal.py:52)."""
+    """The sweep kernel, built here so it pickles by value (see the
+    module docstring)."""
 
     def run_local_sweeps(arr, i0, n, omega, k, own_lo, own_hi):
         """Run ``k`` red-black SOR sweeps in place over ``arr`` (local
@@ -213,81 +191,93 @@ def _sweeps_factory():
 _run_local_sweeps = _sweeps_factory()
 
 
-def _chunk_kernel(n: int, omega: float, k: int, rows_per_block: int):
-    """Build the mapInArrow kernel for one chunk of ``k`` sweeps.
+def _max_merge_factory():
+    """The accumulator param of the per-sweep maxima, built here so it
+    pickles by value (see the module docstring)."""
+    from pyspark.accumulators import AccumulatorParam
 
-    Each task's partition holds one block (plus halo) by construction —
-    a one-block grid is one partition, and otherwise the solver
-    repartitions by id, block ``b`` into partition ``b`` (see
-    solve_blocked), unlike hash-groupBy where the birthday paradox
-    routinely co-locates two blocks in one task and doubles the
-    chunk's wall time (measured: N=2048 nb=8 on 32 shuffle
-    partitions, 196→115 s with one block per task). The kernel still
-    loops over the b values it receives, so correctness never depends
-    on the 1:1 placement.
+    class ElementwiseMax(AccumulatorParam):
+        """Per-sweep maxima merged elementwise: -inf is the identity,
+        and max is commutative, associative and idempotent, so any
+        merge order, and a partition counted twice, give the same
+        vector."""
 
-    mapInArrow, not mapInPandas (round-5 rewrite): the grid dominates
-    the per-chunk payload, and pandas conversion materialized every
-    row's vals as a separate ndarray object (one Python object per
-    grid row, then a vstack copy). Arrow hands the whole block as ONE
-    flat float64 buffer — `reshape(-1, n)` is the entire decode, and
-    the result ships back as one flat buffer + offsets. Same float64
-    ops in the same order, so grids stay bit-identical (golden tests);
-    only the serialization path changed. Measured N=2048: 115 → ~80 s.
-    """
+        def zero(self, value):
+            return (float("-inf"),) * len(value)
 
-    def kernel(batches):
-        import pyarrow as pa
+        def addInPlace(self, a, b):
+            return tuple(max(x, y) for x, y in zip(a, b))
 
-        tables = [pa.Table.from_batches([b]) for b in batches]
-        if not tables:
-            return
-        tbl = pa.concat_tables(tables).combine_chunks()
-        if tbl.num_rows == 0:
-            return
-        bcol = tbl.column("b").to_numpy()
-        icol = tbl.column("i").to_numpy()
-        va = tbl.column("vals")
-        va = va.chunk(0) if isinstance(va, pa.ChunkedArray) else va
-        # every row is a full grid row of width n (no nulls), so the
-        # flattened values buffer IS the row-major matrix
-        mat = va.flatten().to_numpy(zero_copy_only=False).reshape(-1, n)
-        for b in np.unique(bcol):
-            b = int(b)
-            sel = np.flatnonzero(bcol == b)
-            order = np.argsort(icol[sel], kind="stable")
-            sel = sel[order]
-            ivals = icol[sel]
-            i0 = int(ivals[0])
-            arr = mat[sel]  # fancy index = writable float64 copy
+    return ElementwiseMax
+
+
+ElementwiseMax = _max_merge_factory()
+
+
+def _init_block(n: int, rows_per_block: int):
+    """Block ``b`` of the initial grid: getInitialValue over its rows
+    (laplace-common-impl.h:11-33; the rows are written last, so the
+    corners take the row value, as in the C else-if chain)."""
+
+    def init(b):
+        import numpy as np
+
+        lo = b * rows_per_block
+        hi = min(n, lo + rows_per_block)
+        rows = np.zeros((hi - lo, n))
+        rows[:, 0] = 7.32
+        rows[:, n - 1] = 6.88
+        if lo == 0:
+            rows[0, :] = 4.56
+        if hi == n:
+            rows[-1, :] = 9.85
+        return b, lo, rows
+
+    return init
+
+
+def _halo_slices(rows_per_block: int, nb: int, k: int):
+    """The row slices of one block that each block ``t`` needs for a
+    chunk of ``k`` sweeps: its owned rows plus ``2k`` on each side,
+    keyed by ``t``."""
+    halo = 2 * k
+
+    def ship(block):
+        b, i0, rows = block
+        end = i0 + rows.shape[0]
+        first = max(0, (i0 - halo) // rows_per_block)
+        last = min(nb - 1, (end - 1 + halo) // rows_per_block)
+        for t in range(first, last + 1):
+            lo = max(i0, t * rows_per_block - halo)
+            hi = min(end, (t + 1) * rows_per_block + halo)
+            if lo < hi:
+                yield t, (t, lo, rows[lo - i0 : hi - i0])
+
+    return ship
+
+
+def _chunk_kernel(n: int, omega: float, k: int, rows_per_block: int, maxima):
+    """One chunk of ``k`` sweeps over the pieces ``(b, i0, rows)`` of a
+    partition: each block's pieces are stacked in row order, swept,
+    and its owned rows come out as the new block; the per-sweep
+    owned-row maxima go into ``maxima``. One partition holds one block
+    by construction (see solve_blocked), but the kernel groups by ``b``,
+    so correctness never depends on that placement."""
+
+    def kernel(pieces):
+        import numpy as np
+
+        by_block: dict = {}
+        for b, i0, rows in pieces:
+            by_block.setdefault(b, []).append((i0, rows))
+        for b, parts in by_block.items():
+            parts.sort(key=lambda part: part[0])
+            i0 = parts[0][0]
+            arr = np.concatenate([rows for _, rows in parts])  # a writable copy
             own_lo = b * rows_per_block
             own_hi = min(n, own_lo + rows_per_block)
-            diffs = _run_local_sweeps(arr, i0, n, omega, k, own_lo, own_hi)
-            keep = (ivals >= own_lo) & (ivals < own_hi)
-            out = arr[keep]
-            m = out.shape[0]
-            if m == 0:
-                continue
-            vals_arr = pa.ListArray.from_arrays(
-                pa.array(np.arange(m + 1, dtype=np.int32) * n, type=pa.int32()),
-                pa.array(out.reshape(-1), type=pa.float64()),
-            )
-            # per-sweep owned-row maxima ride the first owned row only
-            # (null elsewhere) — one tiny array per block per chunk,
-            # collected driver-side for the convergence check (the
-            # Allreduce(MAX) analog, laplace-par.c:504)
-            diffs_arr = pa.array(
-                [[float(d) for d in diffs]] + [None] * (m - 1),
-                type=pa.list_(pa.float64()),
-            )
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ivals[keep].astype(np.int32), type=pa.int32()),
-                    vals_arr,
-                    diffs_arr,
-                ],
-                names=["i", "vals", "diffs"],
-            )
+            maxima.add(tuple(_run_local_sweeps(arr, i0, n, omega, k, own_lo, own_hi)))
+            yield b, own_lo, arr[own_lo - i0 : own_hi - i0]
 
     return kernel
 
@@ -302,49 +292,50 @@ def solve_blocked(
     """Red-black SOR to convergence with temporal blocking.
 
     Defaults pick ``num_blocks`` so the halo (2k rows each side) stays
-    a minority of each block's payload where the grid allows it; at
-    small N this honestly collapses toward one block — the distributed
-    path is exercised explicitly in tests via ``num_blocks``.
+    a minority of each block's payload where the grid allows it, and
+    at most ``sc.defaultParallelism`` blocks; at small N this honestly
+    collapses toward one block — the distributed path is exercised
+    explicitly in tests via ``num_blocks``.
 
-    Jobs: one eager cut of the initial grid, then per chunk the
-    max-diff collect — plus the halo exchange's shuffle-map job when
-    ``nb > 1`` — and one eager cut for a mid-chunk convergence redo.
-    Every chunk stage runs exactly ``nb`` tasks.
+    Jobs: one per chunk — one stage of one task with one block, else
+    the halo shuffle's map stage and ``nb`` result tasks — and one more
+    for a mid-chunk convergence redo. The initial grid and the result
+    DataFrame run none. With reliable checkpoints, each of these jobs
+    is followed by the one that writes its checkpoint files. The final
+    grid is in block storage when this returns.
     """
     if n < 2:
         raise ValueError("numPointsPerDimension must be >= 2 (laplace-seq.c:155-161)")
+    sc = spark.sparkContext
     omega = get_omega(n)
     epsilon = get_epsilon(n)
     k0 = sweeps_per_job
     if num_blocks is None:
-        par = int(spark.conf.get("spark.default.parallelism", "8"))
         # ≥ 4k rows per block keeps halo redundancy ≤ 100%
-        num_blocks = max(1, min(par, n // max(1, 4 * k0)))
+        num_blocks = max(1, min(sc.defaultParallelism, n // max(1, 4 * k0)))
     rows_per_block = -(-n // num_blocks)  # ceil
     nb = -(-n // rows_per_block)  # effective block count
 
-    def fan_out(rows: DataFrame, k: int) -> DataFrame:
-        halo = 2 * k
-        i = F.col("i")
-        first = F.greatest(F.lit(0), F.floor((i - halo) / rows_per_block))
-        last = F.least(F.lit(nb - 1), F.floor((i + halo) / rows_per_block))
-        return rows.select(
-            F.explode(F.sequence(first, last)).alias("b"), "i", "vals"
-        ).withColumn("b", F.col("b").cast("int"))
-
-    def run_chunk(rows: DataFrame, k: int) -> DataFrame:
-        schema = "i int, vals array<double>, diffs array<double>"
-        blocks = fan_out(rows, k)
+    def run_chunk(grid: RDD, k: int) -> tuple[RDD, tuple]:
+        """One round: ``k`` sweeps from ``grid`` in one job; the cut
+        new grid and the per-sweep global maxima."""
+        maxima = sc.accumulator((float("-inf"),) * k, ElementwiseMax())
         if nb > 1:
-            # block b to partition b of exactly nb: nb Python tasks, none
-            # empty (an empty one still pays the worker's per-task setup);
-            # repartitionByRange would add a boundary-sampling job per chunk
-            blocks = blocks.repartitionById(nb, "b")
-        # else: the fan-out is the identity (b = 0 for every row) and
-        # the grid is already one partition — a narrow map, no exchange
-        return blocks.mapInArrow(_chunk_kernel(n, omega, k, rows_per_block), schema=schema)
+            grid = grid.flatMap(_halo_slices(rows_per_block, nb, k))
+            grid = grid.partitionBy(nb, lambda b: b).values()
+        out = grid.mapPartitions(_chunk_kernel(n, omega, k, rows_per_block, maxima))
+        cut_rdd(out)
+        # a JVM-side action: no Python pass of its own; named here, as
+        # py4j calls otherwise get an arbitrary call site
+        sc._jsc.setCallSite("count at laplace_blocked.py:run_chunk")
+        try:
+            out._jrdd.count()
+        finally:
+            sc._jsc.setCallSite(None)
+        return RDD(out._jrdd, sc, out._jrdd_deserializer), maxima.value
 
-    chunk_start, cur_ids = checkpoint_tracked(make_grid_rows(spark, n, nb))
+    grid = sc.parallelize(range(nb), nb).map(_init_block(n, rows_per_block))
+    cut = False  # whether grid is a cut this solve made (and must free)
     num_iterations = 0
     final_diff = float("inf")
     breakdown_s = 0.0
@@ -356,20 +347,11 @@ def solve_blocked(
             k = min(k, max_iterations - num_iterations)
             if k <= 0:
                 break
-        # lazy cut: the max-diff collect below reads every partition of
-        # the cut, so it computes the chunk and fills its blocks in the
-        # same job — no separate count job. chunk_start must stay
-        # stored until that collect has run.
-        chunk_end, end_ids = checkpoint_tracked(run_chunk(chunk_start, k), eager=False)
         tr = time.monotonic()
-        per_block = chunk_end.where(F.col("diffs").isNotNull()).select("diffs").collect()
-        maxes = [max(row["diffs"][s] for row in per_block) for s in range(k)]
+        chunk_end, maxes = run_chunk(grid, k)
         breakdown_s += time.monotonic() - tr
         converged_at = next((s for s in range(k) if maxes[s] <= epsilon), None)
         if converged_at is None or converged_at == k - 1:
-            chunk_start = chunk_end.drop("diffs")
-            release_checkpoints(spark, cur_ids)  # prev chunk's grid
-            cur_ids = end_ids
             num_iterations += k
             final_diff = maxes[k - 1]
             done = converged_at is not None
@@ -378,17 +360,24 @@ def solve_blocked(
             # from the chunk start (still materialized) so the final
             # grid state matches the reference's stop-after-converged-
             # sweep semantics bit-for-bit
-            redo = converged_at + 1
-            chunk_start, redo_ids = checkpoint_tracked(
-                run_chunk(chunk_start, redo).drop("diffs")
-            )
-            release_checkpoints(spark, cur_ids | end_ids)
-            cur_ids = redo_ids
-            num_iterations += redo
+            chunk_end.unpersist()
+            chunk_end, _ = run_chunk(grid, converged_at + 1)
+            num_iterations += converged_at + 1
             final_diff = maxes[converged_at]
             done = True
+        if cut:
+            grid.unpersist()  # the previous chunk's grid
+        grid, cut = chunk_end, True
     duration = time.monotonic() - t0
-    grid = chunk_start.select(
-        "i", F.posexplode("vals").alias("j", "v")
-    ).select(F.col("i"), F.col("j").cast("int").alias("j"), "v")
-    return LaplaceResult(grid, num_iterations, final_diff, omega, epsilon, duration, breakdown_s)
+
+    def grid_rows(block):
+        _, i0, rows = block
+        return ((i0 + r, row.tolist()) for r, row in enumerate(rows))
+
+    grid_df = spark.createDataFrame(
+        grid.flatMap(grid_rows), "i int, vals array<double>", verifySchema=False
+    )
+    grid_df = grid_df.select("i", F.posexplode("vals").alias("j", "v")).select(
+        "i", F.col("j").cast("int").alias("j"), "v"
+    )
+    return LaplaceResult(grid_df, num_iterations, final_diff, omega, epsilon, duration, breakdown_s)

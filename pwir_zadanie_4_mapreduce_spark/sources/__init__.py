@@ -1,7 +1,7 @@
 """Sources & sinks.
 
 The reference's only source is a generated function-of-position grid
-(laplace-seq.c:85-95 → laplace_blocked.make_grid_rows, and the
+(laplace-seq.c:85-95 → laplace_blocked._init_block, and the
 ``laplace_grid`` Python data source in grid_source.py) and its only
 sinks are an ordered stdout grid dump and a stats line
 (laplace-seq.c:99-111, :224-226 → laplace.format_grid / print_stats).

@@ -10,11 +10,18 @@ bit-equality with it.
 
 from __future__ import annotations
 
+import itertools
+
 import numpy as np
 import pytest
+from pyspark import cloudpickle
 
 from pwir_zadanie_4_mapreduce_spark import laplace
-from pwir_zadanie_4_mapreduce_spark.laplace_blocked import _run_local_sweeps
+from pwir_zadanie_4_mapreduce_spark.laplace_blocked import (
+    ElementwiseMax,
+    _init_block,
+    _run_local_sweeps,
+)
 
 GOLDEN_N4 = """4.5600000000 4.5600000000 4.5600000000 4.5600000000
 7.3200000000 6.5462491961 6.4362495359 6.8800000000
@@ -127,3 +134,38 @@ def test_sweep_kernel_bit_equal_to_scalar(n):
     grid, scalar_iterations, scalar_diff = solve_scalar(n)
     assert (iterations, max_diff) == (scalar_iterations, scalar_diff)
     assert arr.tolist() == grid
+
+
+@pytest.mark.parametrize("n, rows_per_block", [(2, 1), (5, 2), (8, 3), (9, 9)])
+def test_initial_blocks_match_initial_value(n, rows_per_block):
+    """The solver's task-side initial blocks tile the grid of
+    getInitialValue, corners included."""
+    init = _init_block(n, rows_per_block)
+    blocks = [init(b) for b in range(-(-n // rows_per_block))]
+    assert [lo for _, lo, _ in blocks] == list(range(0, n, rows_per_block))
+    grid = np.concatenate([rows for _, _, rows in blocks])
+    assert grid.tolist() == [[initial_value(i, j, n) for j in range(n)] for i in range(n)]
+
+
+def test_max_merge_param_is_order_free_and_idempotent():
+    """The accumulator param of the solver's per-sweep maxima, the
+    Allreduce(MAX) of laplace-par.c:504. Its zero is the identity of
+    max, any merge order gives the elementwise maximum, and an update
+    merged twice (a recomputed partition) changes nothing. It is
+    defined inside a function, so cloudpickle ships it by value, like
+    the sweep kernel."""
+    param = ElementwiseMax()
+    updates = [(0.5, 0.0, 3.0), (0.25, 2.0, 1.0), (0.75, 1.0, 0.0)]
+    zero = param.zero(updates[0])
+    assert zero == (float("-inf"),) * 3
+    for u in updates + [(-1.0, -2.0, -3.0), (0.0, 0.0, 0.0)]:
+        assert param.addInPlace(zero, u) == u
+    for order in itertools.permutations(updates + [updates[1]]):
+        merged = zero
+        for u in order:
+            merged = param.addInPlace(merged, u)
+        assert merged == (0.75, 2.0, 3.0), order
+    for fn in (ElementwiseMax, _run_local_sweeps):
+        assert "<locals>" in fn.__qualname__
+    restored = cloudpickle.loads(cloudpickle.dumps(param))
+    assert restored.addInPlace(zero, updates[0]) == updates[0]

@@ -93,15 +93,25 @@ def test_n32_stats_default_sizing(spark):
     assert (r.num_iterations, f"{r.final_diff:.10f}") == GOLDEN_STATS[32]
 
 
-def test_blocked_storage_stays_bounded(spark):
+def test_blocked_storage_stays_bounded(spark, monkeypatch):
     """Round-4 advice: the chunk loop must release the previous
-    chunk's localCheckpoint — small k at N=16 runs many chunks, each
-    materializing a grid; only the final one may remain persisted."""
-    before = set(pinned_rdds(spark))
-    r = solve_blocked(spark, 16, sweeps_per_job=8)
-    leaked = set(pinned_rdds(spark)) - before
-    assert len(leaked) <= 2, f"chunk checkpoints leaked: {sorted(leaked)}"
-    assert r.num_iterations == 132
+    chunk's cut — small k at N=16 runs many chunks, each storing a
+    grid. After the solve exactly one of its RDDs stays in block
+    storage, the final grid, with every one of its nb partitions
+    stored: each round's own job filled its cut. (A Python-side action
+    over the cut would run the kernel in a new RDD of its own and leave
+    the cut empty.)"""
+    monkeypatch.delenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", raising=False)
+    for num_blocks in (1, 3):
+        before = set(pinned_rdds(spark))
+        r = solve_blocked(spark, 16, num_blocks=num_blocks, sweeps_per_job=8)
+        assert r.num_iterations == 132
+        live = set(pinned_rdds(spark)) - before
+        assert len(live) == 1, f"chunk cuts leaked: {sorted(live)}"
+        stored = {info.id(): info for info in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+        (rdd_id,) = live
+        assert stored[rdd_id].numPartitions() == num_blocks
+        assert stored[rdd_id].numCachedPartitions() == num_blocks
 
 
 def test_max_iterations_cap(spark):
@@ -131,9 +141,9 @@ def test_chunking_invariance_bit_exact(spark):
 
 
 def test_chunking_invariance_reliable_checkpoints(spark, monkeypatch):
-    """The chunk's lazy lineage cut is filled by the max-diff collect.
-    In reliable mode a lazy ``checkpoint()`` writes its files in a
-    second job after that collect, recomputing the chunk; grids,
+    """In reliable mode each chunk's cut is persisted and checkpointed:
+    the chunk's job fills the stored blocks and a second job writes
+    the checkpoint files from them; grids,
     iteration counts and final diffs must still match the
     local-checkpoint run bit for bit — a chunk-boundary convergence,
     a mid-chunk convergence redo with the halo wider than the block,
@@ -162,51 +172,75 @@ def _solve_traced(spark, monkeypatch, group: str, n: int, **kw):
     return traced_jobs(spark, group, lambda: solve_blocked(spark, n, **kw))
 
 
+def _assert_rounds_read_cuts(spark, group: str) -> None:
+    """Per job of ``group``, in submission order, the records its first
+    stage read as input: the first round computes the initial grid in
+    its own task and reads none; every later one, the redo included,
+    reads its start grid from the cut an earlier round filled, rather
+    than running that round's kernel again."""
+    sc = spark.sparkContext
+    tracker, store, jvm = sc.statusTracker(), sc._jsc.sc().statusStore(), sc._jvm
+    no_quantiles = sc._gateway.new_array(jvm.double, 0)
+    records = []
+    for job_id in sorted(tracker.getJobIdsForGroup(group)):
+        first = min(tracker.getJobInfo(job_id).stageIds)
+        stage = store.stageData(first, False, jvm.java.util.ArrayList(), False, no_quantiles)
+        records.append(stage.head().inputRecords())
+    assert records[0] == 0 and all(r > 0 for r in records[1:]), records
+
+
 def test_one_block_job_and_task_budget(spark, monkeypatch):
     """One block (the default sizing below N=256 at k=32): each chunk
-    is ONE job — a narrow mapInArrow over the one-partition grid,
-    whose lazy cut the max-diff collect fills — and every stage runs
-    one task; no exchange anywhere. Besides the chunks, only the
-    initial cut and the mid-chunk redo cut run jobs."""
+    is ONE job of one stage of one task — the narrow kernel pass, whose
+    JVM-side count fills the chunk's cut and whose accumulator brings
+    back the per-sweep maxima — and the mid-chunk convergence redo is
+    one more job of the same shape. No cut or collect job runs, and
+    the initial grid runs none of its own."""
     r, jobs = _solve_traced(spark, monkeypatch, "laplace-budget-1", 16, sweeps_per_job=8)
     assert r.num_iterations == 132
-    chunks = -(-132 // 8)
-    assert len(jobs) <= chunks + 3, jobs
-    assert all(tasks == 1 for _, stages in jobs for _, tasks in stages), jobs
+    chunks = -(-132 // 8)  # 132 = 16·8 + 4: the last chunk converges mid-way
+    assert len(jobs) == chunks + 1, jobs
+    assert all(name.startswith("count at ") for name, _ in jobs), jobs
+    assert all([tasks for _, tasks in stages] == [1] for _, stages in jobs), jobs
+    _assert_rounds_read_cuts(spark, "laplace-budget-1")
 
 
 def test_multi_block_one_task_per_block(spark, monkeypatch):
     """Fewer blocks than shuffle partitions (3 at 4), and more (5 at
-    4): the halo exchange sends block b to partition b of exactly nb,
-    so each chunk's mapInArrow stage — the result stage of its max-diff
-    collect — runs one task per block, each on its own block, and no
-    empty Python task.
-
-    The solve's jobs, in order: the initial cut; per chunk the
-    exchange's shuffle-map job and the collect; on a mid-chunk
-    convergence (both cases here) the redo's shuffle-map job and cut.
-    Nothing runs before the initial cut."""
+    4): each chunk is ONE job of two stages — the halo slices' shuffle
+    map over the nb blocks, then one kernel task per block, block b in
+    partition b, none empty — and so is the mid-chunk convergence redo
+    (both cases converge mid-chunk)."""
     for n, num_blocks, k, iterations in [(16, 3, 8, 132), (20, 5, 16, 183)]:
+        group = f"laplace-budget-{num_blocks}"
         with session_conf(spark, {"spark.sql.shuffle.partitions": "4"}):
             r, jobs = _solve_traced(
-                spark, monkeypatch, f"laplace-budget-{num_blocks}", n,
-                num_blocks=num_blocks, sweeps_per_job=k,
+                spark, monkeypatch, group, n, num_blocks=num_blocks, sweeps_per_job=k,
             )
         assert r.num_iterations == iterations
         chunks = -(-iterations // k)
-        kinds = [
-            "cut" if name.startswith("localCheckpoint at ")
-            else "collect" if name.startswith("collect at ")
-            else "map"
-            for name, _ in jobs
-        ]
-        redo = ["map", "cut"] if iterations % k else []
-        assert kinds == ["cut"] + ["map", "collect"] * chunks + redo, jobs
-        chunk_stages = [st[-1] for (_, st), kind in zip(jobs, kinds) if kind == "collect"]
-        assert all(tasks == num_blocks for _, tasks in chunk_stages), chunk_stages
+        assert iterations % k and len(jobs) == chunks + 1, jobs
+        assert all(name.startswith("count at ") for name, _ in jobs), jobs
+        assert all(
+            [tasks for _, tasks in stages] == [num_blocks, num_blocks] for _, stages in jobs
+        ), jobs
+        _assert_rounds_read_cuts(spark, group)
         # block b's owned rows come out of partition b
         rows_per_block = -(-n // num_blocks)
         placed = r.grid.select(F.spark_partition_id().alias("p"), "i").distinct().collect()
         assert {(row["p"], row["i"] // rows_per_block) for row in placed} == {
             (b, b) for b in range(num_blocks)
         }
+
+
+def test_default_block_count_follows_default_parallelism(spark):
+    """The default block count is capped by ``sc.defaultParallelism``,
+    the slots Spark schedules on, not by the
+    ``spark.default.parallelism`` conf, which an untuned session leaves
+    unset. Here the conf reads three more than the slots, and
+    n = 8·slots at k = 1 would allow 2·slots blocks."""
+    slots = spark.sparkContext.defaultParallelism
+    with session_conf(spark, {"spark.default.parallelism": str(slots + 3)}):
+        r = solve_blocked(spark, 8 * slots, sweeps_per_job=1, max_iterations=1)
+    assert r.num_iterations == 1
+    assert r.grid.rdd.getNumPartitions() == slots

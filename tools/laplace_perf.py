@@ -9,12 +9,14 @@ Runs ``laplace_blocked.solve_blocked``; ``--blocks`` overrides its
 block-count heuristic (the BASELINE.md rows at N >= 1024 used explicit
 counts). Prints the reference-format stats line plus job/chunk
 accounting — the chunk estimate next to the solve's job count read
-from Spark's status tracker — so the Spark-vs-C ratio in BASELINE.md
-is a measured number, not an argument.
+from Spark's status tracker and the median job duration read from its
+status store — so the Spark-vs-C ratio in BASELINE.md is a measured
+number, not an argument.
 """
 from __future__ import annotations
 
 import os
+import statistics
 import sys
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -47,11 +49,18 @@ def main() -> None:
     res = solve_blocked(spark, n, num_blocks=num_blocks, sweeps_per_job=sweeps)
     # the status tracker is filled by a listener on Spark's event bus
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    jobs = len(sc.statusTracker().getJobIdsForGroup("laplace-perf"))
+    job_ids = sc.statusTracker().getJobIdsForGroup("laplace-perf")
+    store = sc._jsc.sc().statusStore()
+    job_s = []
+    for job_id in job_ids:
+        job = store.job(job_id)
+        ms = job.completionTime().get().getTime() - job.submissionTime().get().getTime()
+        job_s.append(ms / 1e3)
     laplace.print_stats(res, file=sys.stdout)
     print(
         f"config: N={n} sweeps_per_job={sweeps} cpus={cpus or DEFAULT_CPUS} "
-        f"chunks~={(res.num_iterations + sweeps - 1) // sweeps} jobs={jobs} "
+        f"chunks~={(res.num_iterations + sweeps - 1) // sweeps} jobs={len(job_s)} "
+        f"job_p50_s={statistics.median(job_s) if job_s else 0.0:.4f} "
         f"s_per_iter={res.duration_s / max(1, res.num_iterations):.4f}"
     )
     spark.stop()

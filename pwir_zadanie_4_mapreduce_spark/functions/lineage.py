@@ -26,7 +26,8 @@ The cost delta is one write+read of the cut frame per cut (measured in
 SCALE.md).
 
 Call sites keep chain style via ``.transform(cut_lineage)``.
-``cut_rdd`` is the same switch for an RDD (the Laplace solver's grid).
+``cut_rdd`` is the same switch for an RDD (the Laplace solver's grid);
+``release_cut`` frees such a cut.
 """
 
 from __future__ import annotations
@@ -91,3 +92,14 @@ def cut_rdd(rdd: RDD) -> None:
         rdd.checkpoint()
     else:
         rdd.localCheckpoint()
+
+
+def release_cut(rdd: RDD) -> None:
+    """Free the blocks of ``rdd``, cut by ``cut_rdd``, when nothing
+    reads it again. ``RDD.unpersist`` logs a WARN for every locally
+    checkpointed RDD, that its lineage is truncated and cannot be
+    recomputed, which is what a cut is for: an iterative caller would
+    write that line once per round. The SparkContext's own removal,
+    the one Spark's context cleaner runs for an unreachable RDD, frees
+    the same blocks without it."""
+    rdd.context._jsc.sc().unpersistRDD(rdd.id(), False)

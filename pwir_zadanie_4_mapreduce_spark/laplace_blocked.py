@@ -74,7 +74,7 @@ from pyspark import RDD
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from .functions.lineage import cut_rdd
+from .functions.lineage import cut_rdd, release_cut
 from .laplace import LaplaceResult, get_epsilon, get_omega
 
 
@@ -360,13 +360,13 @@ def solve_blocked(
             # from the chunk start (still materialized) so the final
             # grid state matches the reference's stop-after-converged-
             # sweep semantics bit-for-bit
-            chunk_end.unpersist()
+            release_cut(chunk_end)
             chunk_end, _ = run_chunk(grid, converged_at + 1)
             num_iterations += converged_at + 1
             final_diff = maxes[converged_at]
             done = True
         if cut:
-            grid.unpersist()  # the previous chunk's grid
+            release_cut(grid)  # the previous chunk's grid
         grid, cut = chunk_end, True
     duration = time.monotonic() - t0
 

@@ -119,3 +119,23 @@ def traced_jobs(spark, group: str, fn):
         done = [(s.name, s.numTasks) for s in stages if s and s.numCompletedTasks > 0]
         jobs.append((store.job(job_id).name(), done))
     return out, jobs
+
+
+def run_driver(script: str, cwd, env: dict[str, str] | None = None):
+    """Run ``script`` in a fresh Python process from ``cwd``, the way a
+    driver program that imports this repo runs: its own JVM in local
+    mode (``SPARK_GRAFT_MASTER`` unset), and a PYTHONPATH without the
+    repo root this test session added. ``env`` entries are set on top.
+    Returns the completed process; stdout and stderr are text."""
+    import subprocess
+
+    environ = {**os.environ, "SPARK_GRAFT_DRIVER_MEM": "1g", **(env or {})}
+    environ.pop("SPARK_GRAFT_MASTER", None)
+    parts = [p for p in environ.pop("PYTHONPATH", "").split(os.pathsep) if p and p != REPO_ROOT]
+    if parts:
+        environ["PYTHONPATH"] = os.pathsep.join(parts)
+    prelude = f"import sys\nsys.path.insert(0, {REPO_ROOT!r})\n"
+    return subprocess.run(
+        [sys.executable, "-c", prelude + script],
+        cwd=cwd, env=environ, capture_output=True, text=True, timeout=300,
+    )

@@ -20,7 +20,7 @@ from pwir_zadanie_4_mapreduce_spark import laplace
 from pwir_zadanie_4_mapreduce_spark.laplace_blocked import solve_blocked
 from pwir_zadanie_4_mapreduce_spark.session import pinned_rdds
 
-from tests.conftest import session_conf, traced_jobs
+from tests.conftest import run_driver, session_conf, traced_jobs
 from tests.test_laplace import GOLDEN_N4, GOLDEN_N8, GOLDEN_STATS, solve_scalar
 
 
@@ -112,6 +112,24 @@ def test_blocked_storage_stays_bounded(spark, monkeypatch):
         (rdd_id,) = live
         assert stored[rdd_id].numPartitions() == num_blocks
         assert stored[rdd_id].numCachedPartitions() == num_blocks
+
+
+def test_solve_logs_no_checkpoint_warning(tmp_path):
+    """Releasing a round's cut writes nothing to the log: an N=16 solve
+    (5 rounds) in a session of its own, whose JVM stderr this test can
+    read, at Spark's default WARN level."""
+    proc = run_driver(
+        """
+from pwir_zadanie_4_mapreduce_spark.laplace_blocked import solve_blocked
+from pwir_zadanie_4_mapreduce_spark.session import build_session
+r = solve_blocked(build_session(cpus=2), 16)
+print(r.num_iterations, f"{r.final_diff:.10f}")
+""",
+        tmp_path,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert tuple(proc.stdout.split()) == (str(GOLDEN_STATS[16][0]), GOLDEN_STATS[16][1])
+    assert "locally checkpointed" not in proc.stderr
 
 
 def test_max_iterations_cap(spark):

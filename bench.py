@@ -6,7 +6,8 @@ local[$SPARK_GRAFT_CPUS] and print ONE JSON line:
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Each query is materialized with a noop write (no driver collect, no
-sink I/O) so the number is the engine's execution time. One warm-up
+sink I/O) so the number is the engine's execution time; a query's
+time is the min of two runs, and ``value`` is their sum. One warm-up
 query amortizes JVM/codegen startup out of the first measurement.
 """
 
@@ -318,43 +319,10 @@ def _testdata_fingerprint(src_dir: str) -> dict[str, str]:
     return out
 
 
-def _load_bench_ref(fname: str = "bench_ref.json") -> dict[str, float]:
-    """Committed per-query fast-window steady-state reference —
-    the basis of the median-ratio host normalizer. bench_ref.json is
-    the canonical sf0.1 vector; bench_ref.sf1.json (round-10 verdict
-    #6) is the sf1 vector, where plan regressions actually move
-    numbers (at sf0.1 half the registry sits on the latency floor).
-    Empty dict if absent/unreadable (normalizer then disabled)."""
-    try:
-        with open(os.path.join(REPO_ROOT, fname)) as fh:
-            return {k: float(v) for k, v in json.load(fh)["queries"].items()}
-    except (OSError, ValueError, KeyError):
-        return {}
-
-
-def _host_factor(timings: dict[str, float], ref: dict[str, float]) -> tuple[float | None, int]:
-    """Median of per-query current/reference ratios — the host-band
-    estimate. Replaces the 2-sample q1 canary mean (round-9 close: the
-    canary normalizer INVERTED the ordering of two honest runs because
-    a 2-sample mean is ~±30% noisy; the median over ~146 query ratios
-    is robust both to sampling noise and to a minority of genuine plan
-    changes, which shift their own ratios but not the median)."""
-    import statistics
-
-    ratios = [t / ref[q] for q, t in timings.items() if ref.get(q, 0) >= 0.1]
-    if len(ratios) < 20:
-        return None, len(ratios)
-    return statistics.median(ratios), len(ratios)
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from pwir_zadanie_4_mapreduce_spark.session import (
-        DEFAULT_CPUS,
-        build_session,
-        release_storage,
-    )
+    from pwir_zadanie_4_mapreduce_spark.session import DEFAULT_CPUS, build_session, release_storage
 
     spark = build_session(
         app_name="bench",
@@ -372,204 +340,55 @@ def main() -> None:
     # warm-up: JVM, codegen, parquet footer caches
     materialize(queries["q1_pricing_summary"](spark, sf_dir))
 
-    # Host-window canary (round-7 verdict #7): this box's throughput
-    # swings ~2× between windows (BASELINE.md "Host-throughput
-    # banding"), so the record carries the canary measurement itself —
-    # a warm min-of-2 q1 — plus the fast-window reference, making
-    # cross-window totals machine-normalizable instead of a prose
-    # caveat. q1 ≈ 0.53 s in a fast window at sf0.1/multifile-32.
-    # The fast/slow/drifted verdict is calibrated for THAT config only:
-    # a non-canonical sf or a non-default master still records the raw
-    # canary numbers, but the verdict is "n/a" (round-8 ADVICE — the
-    # local-cluster record spuriously read "slow").
+    # Min of two timed runs per query, storage released before each:
+    # first-touch effects (codegen, parquet footers, page cache, JIT)
+    # can double a single run; the min is the steady-state plan cost.
+    timings: dict[str, float] = {}
+    for name in HEADLINE:
+        runs: list[float] = []
+        for _ in range(2):
+            release_storage(spark)
+            t0 = time.monotonic()
+            materialize(queries[name](spark, sf_dir))
+            runs.append(time.monotonic() - t0)
+        timings[name] = round(min(runs), 3)
+
     sf = os.path.basename(sf_dir.rstrip("/")).rsplit("sf", 1)[-1]
     try:
         sf_val: float | str = float(sf)
     except ValueError:
         sf_val = sf
-    canonical_sf = float(os.environ.get("SPARK_GRAFT_CANONICAL_SF", "0.1"))
     alt_master = os.environ.get("SPARK_GRAFT_MASTER")
-    canonical_config = sf_val == canonical_sf and not alt_master and layout == "multifile-32"
-    # sf1 is the second NORMALIZED config (round-10 verdict #6): same
-    # machine shape and layout, 10x the input — tracked against its own
-    # committed reference vector so sf1 closes carry round-over-round
-    # deltas too. The fast/slow canary verdict stays calibrated (and
-    # emitted) for the canonical sf0.1 config only.
-    # exclusive with canonical_config: if SPARK_GRAFT_CANONICAL_SF=1.0
-    # an sf1 run is the CANONICAL config and must normalize against
-    # bench_ref.json, never double-match both branches (r11 ADVICE)
-    sf1_config = (
-        sf_val == 1.0
-        and not canonical_config
-        and not alt_master
-        and layout == "multifile-32"
-    )
-    canary_ref = float(os.environ.get("SPARK_GRAFT_CANARY_REF", "0.53"))
-    canary_best = float("inf")
-    for _ in range(2):
-        t0 = time.monotonic()
-        materialize(queries["q1_pricing_summary"](spark, sf_dir))
-        canary_best = min(canary_best, time.monotonic() - t0)
-    canary_q1_s = round(canary_best, 3)
-    # "fast" within 1.4× of the reference; beyond that the window is
-    # degraded and totals should be read against canary_q1_s/ref.
-    if canonical_config:
-        canary_verdict = "fast" if canary_q1_s <= 1.4 * canary_ref else "slow"
-    else:
-        canary_verdict = "n/a"
-
-    # Per-query min-of-2 (round-4 verdict #3): first-touch effects —
-    # codegen compilation, parquet footer/OS page-cache misses, JIT —
-    # can double a single measurement and produced false >2× round-
-    # over-round regressions (r03 bigram 6.9 s outlier, r04 eventmix/
-    # yoy flags). Two timed runs per query, storage released before
-    # each so both start from the same state; report the min (the
-    # steady-state plan cost — what a warm cluster would pay).
-    runs_per_query = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
-    timings: dict[str, float] = {}
-    extra_runs = 0
-    for name in HEADLINE:
-        runs: list[float] = []
-        for _ in range(runs_per_query):
-            release_storage(spark)
-            t0 = time.monotonic()
-            materialize(queries[name](spark, sf_dir))
-            runs.append(time.monotonic() - t0)
-        # Adaptive third run (round-8): intermittent host stalls hit
-        # random victims — a query whose two runs disagree by >1.4×
-        # may have had BOTH runs land in a stall (observed: untouched
-        # queries reading 2–6× in one bench, normal standalone). High
-        # spread means the measurement is suspect; one more sample
-        # bounds the cost to the noisy queries only.
-        if runs_per_query >= 2 and max(runs) > 1.4 * min(runs):
-            release_storage(spark)
-            t0 = time.monotonic()
-            materialize(queries[name](spark, sf_dir))
-            runs.append(time.monotonic() - t0)
-            extra_runs += 1
-        timings[name] = round(min(runs), 3)
-
-    # Stall-proofing pass (round-9 verdict #4: sim_topk_pq's committed
-    # 2.94 s was a host stall; steady state 1.13-1.45 s). A query whose
-    # min-of-N still exceeds 1.5× its expected cost in THIS window
-    # (host_factor × committed reference) had every run land in a stall
-    # — re-run it once; if it stays over the band, the entry is marked
-    # stall_suspect in the JSON instead of silently polluting the
-    # round-over-round record.
-    if canonical_config:
-        ref_vector = "bench_ref.json"
-    elif sf1_config:
-        ref_vector = "bench_ref.sf1.json"
-    else:
-        ref_vector = None
-    ref = _load_bench_ref(ref_vector) if ref_vector else {}
-    stall_suspects: list[str] = []
-    stall_reruns = 0
-    factor0, _ = _host_factor(timings, ref)
-    if factor0 is not None:
-        band = max(1.0, factor0)
-        suspects = [
-            q for q, t in timings.items()
-            if ref.get(q, 0) >= 0.1 and t > 1.5 * band * ref[q]
-        ]
-        for name in suspects[:12]:  # bound the extra cost
-            release_storage(spark)
-            t0 = time.monotonic()
-            materialize(queries[name](spark, sf_dir))
-            timings[name] = round(min(timings[name], time.monotonic() - t0), 3)
-            stall_reruns += 1
-        factor1, _ = _host_factor(timings, ref)
-        band = max(1.0, factor1 if factor1 is not None else band)
-        stall_suspects = sorted(
-            q for q, t in timings.items()
-            if ref.get(q, 0) >= 0.1 and t > 1.5 * band * ref[q]
-        )
-
-    # end-of-run canary: the host band is TIME-VARYING — a fast window
-    # at start does not certify the whole run. A degraded end canary
-    # marks the record as drift-contaminated (re-run it).
-    canary_end_best = float("inf")
-    for _ in range(2):
-        release_storage(spark)
-        t0 = time.monotonic()
-        materialize(queries["q1_pricing_summary"](spark, sf_dir))
-        canary_end_best = min(canary_end_best, time.monotonic() - t0)
-    canary_end_q1_s = round(canary_end_best, 3)
-    if canonical_config and canary_end_q1_s > 1.4 * canary_ref:
-        canary_verdict = "drifted"
-
-    total = round(sum(timings.values()), 3)
-    # Median-ratio-normalized total (round-9 verdict #2, replacing the
-    # round-8 q1-canary normalizer): scale the total by the MEDIAN of
-    # per-query current/reference ratios against the committed
-    # bench_ref.json fast-window vector. The r9 close proved the
-    # 2-sample q1 canary mean inverts orderings (raw 83.6 vs 93.1 →
-    # normalized 105.4 vs 90.8); the 146-sample median maps the two
-    # full r9 records (raw 83.6 / 96.5, identical code) to 83.65 /
-    # 83.17 — a 0.6 % gap. Robust to a minority of genuine plan
-    # changes (they move their own ratios, not the median); the ref
-    # vector must be refreshed at round close when plans change
-    # broadly. Only computed for the canonical config. The q1 canaries
-    # stay recorded as window diagnostics, not as the normalizer.
-    normalized_total = None
-    host_factor = None
-    n_ref_shared = 0
-    if ref:
-        host_factor, n_ref_shared = _host_factor(timings, ref)
-        if host_factor:
-            normalized_total = round(total / host_factor, 3)
-            host_factor = round(host_factor, 4)
     line = json.dumps(
         {
             "metric": "headline_queries_total",
-            "value": total,
-            "normalized_total": normalized_total,
-            "normalizer": "median_ratio_vs_bench_ref",
-            "ref_vector": ref_vector,
-            "host_factor": host_factor,
-            "n_ref_shared": n_ref_shared,
-            "stall_suspects": stall_suspects,
-            "stall_reruns": stall_reruns,
+            "value": round(sum(timings.values()), 3),
             "unit": "sec",
             "queries": timings,
             "sf": sf_val,
-            "runs_per_query": runs_per_query,
-            "adaptive_third_runs": extra_runs,
+            "runs_per_query": 2,
             "aggregation": "min",
             "layout": layout,
-            "canary_q1_s": canary_q1_s,
-            "canary_end_q1_s": canary_end_q1_s,
-            "canary_fast_ref_s": canary_ref,
-            "canary_verdict": canary_verdict,
             "testdata_fingerprint": _testdata_fingerprint(src_sf_dir),
-            "master": os.environ.get("SPARK_GRAFT_MASTER", f"local[{DEFAULT_CPUS}]"),
+            "master": alt_master or f"local[{DEFAULT_CPUS}]",
         }
     )
     print(line)
-    # Also persist to disk: the driver's stdout capture has truncated
-    # this (very long) line before (BENCH_r03.json "parsed": null) —
-    # the file copy is the durable record. Guard (round-6 advice): the
-    # committed record is ALWAYS the canonical sf — a smoke run at a
-    # smaller sf must not overwrite it and corrupt the round-over-round
-    # history (r6's record briefly read 43% faster because it was an
-    # sf0.01 run). Non-canonical runs get a suffixed file instead.
-    # A non-default master (e.g. local-cluster multi-process evidence
-    # runs) is a different machine shape — never the canonical record.
+    # The file is the durable record (the driver's stdout capture has
+    # truncated this long line before). Only sf0.1 on the default
+    # master writes bench_out.json: a smoke run at another sf or a
+    # local-cluster run gets a suffixed file, so it cannot overwrite
+    # the round-over-round record.
     if alt_master:
         tag = "".join(c if c.isalnum() else "-" for c in alt_master).strip("-")
         out_name = f"bench_out.{tag}.json"
-    elif sf_val == canonical_sf:
+    elif sf_val == 0.1:
         out_name = "bench_out.json"
     else:
         out_name = f"bench_out.sf{sf}.json"
     if out_name != "bench_out.json":
-        why = (
-            f"master={alt_master}" if alt_master else f"sf={sf_val} != canonical {canonical_sf}"
-        )
-        print(
-            f"note: {why}; writing {out_name} (bench_out.json untouched)",
-            file=sys.stderr,
-        )
+        why = f"master={alt_master}" if alt_master else f"sf={sf_val} != canonical 0.1"
+        print(f"note: {why}; writing {out_name} (bench_out.json untouched)", file=sys.stderr)
     with open(os.path.join(REPO_ROOT, out_name), "w") as fh:
         fh.write(line + "\n")
     spark.stop()

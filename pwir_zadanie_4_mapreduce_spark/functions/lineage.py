@@ -27,7 +27,7 @@ SCALE.md).
 
 Call sites keep chain style via ``.transform(cut_lineage)``.
 ``cut_rdd`` is the same switch for an RDD (the Laplace solver's grid);
-``release_cut`` frees such a cut.
+``release_cut`` frees such a cut, or any stored RDD, by id.
 """
 
 from __future__ import annotations
@@ -59,22 +59,22 @@ def _ensure_checkpoint_dir(sc: SparkContext) -> None:
     _CONFIGURED_APPS.add(app)
 
 
-def cut_lineage(df: DataFrame, eager: bool = False) -> DataFrame:
+def cut_lineage(df: DataFrame) -> DataFrame:
     """Truncate ``df``'s lineage: localCheckpoint by default, reliable
     ``checkpoint()`` when SPARK_GRAFT_RELIABLE_CHECKPOINT=1.
 
-    ``eager=False`` (the default) defers the count job, but the cut is
-    lazy only over a narrow plan. The cut plans ``df`` physically on
-    the spot, and under AQE that runs every shuffle-map stage of the
-    plan before this returns; only the stage after the last exchange
-    waits for the first action. That action fills the local blocks as
-    it computes them. A reliable ``checkpoint()`` writes its files in
-    a second job once that action finishes, recomputing the cut frame
-    from its last exchange (or its scan)."""
+    The cut defers its count job, but it is lazy only over a narrow
+    plan. It plans ``df`` physically on the spot, and under AQE that
+    runs every shuffle-map stage of the plan before this returns; only
+    the stage after the last exchange waits for the first action. That
+    action fills the local blocks as it computes them. A reliable
+    ``checkpoint()`` writes its files in a second job once that action
+    finishes, recomputing the cut frame from its last exchange (or its
+    scan)."""
     if reliable_checkpoints_enabled():
         _ensure_checkpoint_dir(df.sparkSession.sparkContext)
-        return df.checkpoint(eager=eager)
-    return df.localCheckpoint(eager=eager)
+        return df.checkpoint(eager=False)
+    return df.localCheckpoint(eager=False)
 
 
 def cut_rdd(rdd: RDD) -> None:
@@ -94,12 +94,14 @@ def cut_rdd(rdd: RDD) -> None:
         rdd.localCheckpoint()
 
 
-def release_cut(rdd: RDD) -> None:
-    """Free the blocks of ``rdd``, cut by ``cut_rdd``, when nothing
-    reads it again. ``RDD.unpersist`` logs a WARN for every locally
-    checkpointed RDD, that its lineage is truncated and cannot be
-    recomputed, which is what a cut is for: an iterative caller would
-    write that line once per round. The SparkContext's own removal,
-    the one Spark's context cleaner runs for an unreachable RDD, frees
-    the same blocks without it."""
-    rdd.context._jsc.sc().unpersistRDD(rdd.id(), False)
+def release_cut(sc: SparkContext, rdd_id: int) -> None:
+    """Free the blocks of the RDD ``rdd_id`` (a cut by ``cut_rdd``, or
+    any RDD the session holds in storage) when nothing reads it again.
+    ``RDD.unpersist`` logs a WARN for every locally checkpointed RDD,
+    that its lineage is truncated and cannot be recomputed, which is
+    what a cut is for: an iterative caller would write that line once
+    per round. The SparkContext's own removal, the one Spark's context
+    cleaner runs for an unreachable RDD, frees the same blocks without
+    it. Keyed by id, so ``session.release_storage`` frees the ids
+    ``session.pinned_rdds`` returns through it too."""
+    sc._jsc.sc().unpersistRDD(rdd_id, False)

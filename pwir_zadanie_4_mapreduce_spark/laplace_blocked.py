@@ -360,13 +360,13 @@ def solve_blocked(
             # from the chunk start (still materialized) so the final
             # grid state matches the reference's stop-after-converged-
             # sweep semantics bit-for-bit
-            release_cut(chunk_end)
+            release_cut(sc, chunk_end.id())
             chunk_end, _ = run_chunk(grid, converged_at + 1)
             num_iterations += converged_at + 1
             final_diff = maxes[converged_at]
             done = True
         if cut:
-            release_cut(grid)  # the previous chunk's grid
+            release_cut(sc, grid.id())  # the previous chunk's grid
         grid, cut = chunk_end, True
     duration = time.monotonic() - t0
 

@@ -506,7 +506,10 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select("doc_id", F.explode(tokenize(F.col("text"))).alias("term"))
     # r12 optimization round (guide §7.2): tf feeds BOTH the corpus df
     # aggregation and the scored probe side — without a checkpoint the
-    # tokenize + explode + (doc, term) agg planned twice.
+    # tokenize + explode + (doc, term) agg planned twice. Re-measured
+    # at sf0.1, local[4] on a 4-core host (tools/probe.py --ref, two
+    # sets of 10 rounds): median with the cut 1.285 / 1.457 s, without
+    # it 1.418 / 1.524 s, so the cut stays.
     tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf")).transform(cut_lineage)
     df = tf.groupBy("term").agg(F.count("*").alias("df"))
     n = docs.agg(F.count("*").alias("n_docs"))

@@ -42,6 +42,7 @@ import shlex
 from pyspark.sql import SparkSession
 
 from pwir_zadanie_4_mapreduce_spark import worker_daemon
+from pwir_zadanie_4_mapreduce_spark.functions.lineage import release_cut
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -192,15 +193,14 @@ def get_or_tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
-def pinned_rdds(spark: SparkSession) -> dict:
-    """The RDDs the session holds in block storage, by id, as py4j
-    handles: ``persist``/``cache`` and ``localCheckpoint`` both
-    register in ``JavaSparkContext.getPersistentRDDs``, which
+def pinned_rdds(spark: SparkSession) -> set[int]:
+    """The ids of the RDDs the session holds in block storage:
+    ``persist``/``cache`` and ``localCheckpoint`` both register in
+    ``JavaSparkContext.getPersistentRDDs``, which
     ``catalog.clearCache()`` does not cover. The private ``_jsc``
     handle is the only way to it from Python; this is the one place
     that reaches for it."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    return {int(k): jmap.get(k) for k in jmap.keySet().toArray()}
+    return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()}
 
 
 def release_storage(spark: SparkSession) -> None:
@@ -219,7 +219,7 @@ def release_storage(spark: SparkSession) -> None:
         # Guarded: pinned_rdds rides a private API with no stability
         # guarantee, and losing the cleanup must not abort the
         # caller's run.
-        for rdd in pinned_rdds(spark).values():
-            rdd.unpersist()
+        for rdd_id in pinned_rdds(spark):
+            release_cut(spark.sparkContext, rdd_id)
     except Exception:
         pass

@@ -1,4 +1,5 @@
-"""Executor-loss recovery for the iterative family (round-9 verdict #5).
+"""Executor-loss recovery for the iterative family (round-9 verdict #5),
+and for a query whose tasks run in Python workers.
 
 Gated behind PWIR_CHAOS=1: it boots a multi-JVM local-cluster in a
 subprocess (own session, so it can never collide with the suite's
@@ -41,6 +42,9 @@ def test_reliable_checkpoint_survives_executor_kill(tmp_path):
             str(out),
             "dedup_cluster_components",
             "graph_pagerank_fixed",
+            # decodes in Python workers: the killed executor holds a
+            # worker daemon and its Unix socket
+            "multimodal_png_decode_stats",
         ],
         capture_output=True,
         text=True,

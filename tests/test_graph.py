@@ -144,7 +144,7 @@ def test_label_propagation_job_budget(spark, monkeypatch):
     from pwir_zadanie_4_mapreduce_spark.operators import analytics
 
     cuts = []
-    monkeypatch.setattr(analytics, "cut_lineage", lambda df, eager=False: cuts.append(df) or df)
+    monkeypatch.setattr(analytics, "cut_lineage", lambda df: cuts.append(df) or df)
     query = entrymod.queries()["graph_label_propagation"]
     df, build = traced_jobs(spark, "lpa-build", lambda: query(spark, SMOKE_SF))
     # the timed action of the benchmark: a collect would lend its call

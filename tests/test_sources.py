@@ -10,6 +10,7 @@ import tempfile
 
 from pyspark.sql import functions as F
 
+import bench
 from pwir_zadanie_4_mapreduce_spark.catalog import load_table
 from pwir_zadanie_4_mapreduce_spark.sources.io import (
     read_csv,
@@ -192,3 +193,14 @@ def test_multifile_progress_goes_to_stderr(spark, tmp_path, capsys):
     out, err = capsys.readouterr()
     assert out == ""
     assert "  lineitem: 2 file(s)" in err
+
+
+def test_testdata_fingerprint_shape():
+    fp = bench._testdata_fingerprint("/root/testdata/sf0.001")
+    assert set(fp) == {
+        "region", "nation", "customer", "supplier", "part",
+        "orders", "lineitem", "events", "documents", "embeddings",
+    }
+    for v in fp.values():
+        rows, h = v.split(":")
+        assert int(rows) >= 1 and len(h) == 12

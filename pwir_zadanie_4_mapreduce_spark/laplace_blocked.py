@@ -10,12 +10,14 @@ This module applies the standard HPC *ghost-zone / temporal blocking*
 optimization to the Spark execution model:
 
 - the grid state is an RDD of row BLOCKS, one element
-  ``(b, i0, rows)`` per block: block ``b`` owns the grid rows
+  ``(b, (i0, rows))`` per block: block ``b`` owns the grid rows
   ``[i0, i0 + len(rows))``, held as one float64 ndarray in partition
   ``b`` — a 1-D row-block decomposition, exactly the reference's
-  scatter (laplace-par.c:245-251). numpy makes the initial blocks
+  scatter (laplace-par.c:245-251). The grid a solve starts from is
+  ``(b, None)`` per block: numpy makes the initial blocks
   (getInitialValue, laplace-common-impl.h:11-33) inside the first
-  round's tasks, so the initial grid runs no job of its own;
+  round's tasks, in the function the task runs anyway, so the initial
+  grid runs no job and no Python pass of its own;
 - a *chunk* of ``k`` sweeps (one round) ships each block its rows plus
   a ``2k``-row halo on each side (one red-black sweep has data
   dependency radius 2: phase 1 reads phase 0's values one row away,
@@ -23,8 +25,9 @@ optimization to the Spark execution model:
   row slices its neighbors need and ``partitionBy(nb, b ↦ b)`` sends
   block ``b``'s slices to partition ``b`` (the rank-addressed
   scatter, laplace-par.c:307-337) — one Python task per block, none
-  empty. With one block there is no halo to ship and no shuffle: the
-  round is a narrow ``mapPartitions``;
+  empty, which reads the shuffle's ``(b, (i0, rows))`` pieces as they
+  come. With one block there is no halo to ship and no shuffle: the
+  round is one narrow Python pass over the previous grid;
 - each block then runs all ``k`` sweeps locally in vectorized numpy
   (one dense-plane kernel for every N, odd or even) — zero
   communication for k sweeps. Halo rows go stale one
@@ -35,15 +38,21 @@ optimization to the Spark execution model:
   laplace-par.c:504): each phase updates a disjoint color set and
   owned cells are valid at every intermediate sweep, so the
   block-local owned-row maxima reduce to the exact global maximum.
-  They reach the driver through a fresh accumulator per round whose
-  merge is elementwise max — order-free and idempotent, so a
-  recomputed partition cannot change the result;
+  They reach the driver through an accumulator whose merge is
+  elementwise max — order-free and idempotent, so a recomputed
+  partition cannot change the result — one per chunk size, reset
+  before each round;
 - the round's output is cut (``functions.lineage.cut_rdd``) and the
   round's only action is a JVM-side count over that cut: it computes
   the round, fills the cut and delivers the maxima, so a round is ONE
-  job (one stage, two with the halo shuffle). The next round reads the
-  cut through a fresh ``RDD`` over its JVM handle, so PySpark cannot
-  pipeline this round's kernel into the next one's task.
+  job (one stage, two with the halo shuffle). A round's fixed cost is
+  what the driver and the JVM do around that job, so a solve pickles
+  the kernel into a JVM ``PythonFunction`` once per chunk size, and
+  each round only puts a ``PythonRDD`` over it and the previous cut
+  and submits the count asynchronously (``run_chunk`` names the
+  Spark-internal calls and why). The round's output is a plain
+  ``RDD`` over that ``PythonRDD``, so PySpark cannot pipeline this
+  round's kernel into the next one's task.
 
 Communication drops from ``2·iters`` exchanges (one per color phase)
 to ``iters/k`` — with the fan-out factor ``1 + 4k/rows_per_block`` as
@@ -71,6 +80,8 @@ from __future__ import annotations
 import time
 
 from pyspark import RDD
+from pyspark.core.rdd import _wrap_function
+from pyspark.serializers import AutoBatchedSerializer
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
@@ -236,14 +247,31 @@ def _init_block(n: int, rows_per_block: int):
     return init
 
 
-def _halo_slices(rows_per_block: int, nb: int, k: int):
+def _block_rows(n: int, rows_per_block: int):
+    """``rows(b, piece)``: the ``(i0, rows)`` of a grid element
+    ``(b, piece)``. The first round reads ``(b, None)``, which stands
+    for block ``b``'s initial rows, made here inside the task."""
+    init = _init_block(n, rows_per_block)
+
+    def rows(b, piece):
+        if piece is None:
+            _, lo, initial = init(b)
+            return lo, initial
+        return piece
+
+    return rows
+
+
+def _halo_slices(n: int, rows_per_block: int, nb: int, k: int):
     """The row slices of one block that each block ``t`` needs for a
     chunk of ``k`` sweeps: its owned rows plus ``2k`` on each side,
     keyed by ``t``."""
     halo = 2 * k
+    block_rows = _block_rows(n, rows_per_block)
 
     def ship(block):
-        b, i0, rows = block
+        b, piece = block
+        i0, rows = block_rows(b, piece)
         end = i0 + rows.shape[0]
         first = max(0, (i0 - halo) // rows_per_block)
         last = min(nb - 1, (end - 1 + halo) // rows_per_block)
@@ -251,25 +279,28 @@ def _halo_slices(rows_per_block: int, nb: int, k: int):
             lo = max(i0, t * rows_per_block - halo)
             hi = min(end, (t + 1) * rows_per_block + halo)
             if lo < hi:
-                yield t, (t, lo, rows[lo - i0 : hi - i0])
+                yield t, (lo, rows[lo - i0 : hi - i0])
 
     return ship
 
 
 def _chunk_kernel(n: int, omega: float, k: int, rows_per_block: int, maxima):
-    """One chunk of ``k`` sweeps over the pieces ``(b, i0, rows)`` of a
-    partition: each block's pieces are stacked in row order, swept,
-    and its owned rows come out as the new block; the per-sweep
-    owned-row maxima go into ``maxima``. One partition holds one block
-    by construction (see solve_blocked), but the kernel groups by ``b``,
-    so correctness never depends on that placement."""
+    """One chunk of ``k`` sweeps over the pieces ``(b, (i0, rows))`` of
+    a partition: each block's pieces are stacked in row order, swept,
+    and its owned rows come out as the new block ``(b, (i0, rows))``;
+    the per-sweep owned-row maxima go into ``maxima``. The function
+    takes ``(partition index, pieces)``, the signature of the JVM
+    ``PythonFunction`` it is wrapped into. One partition holds one
+    block by construction (see solve_blocked), but the kernel groups
+    by ``b``, so correctness never depends on that placement."""
+    block_rows = _block_rows(n, rows_per_block)
 
-    def kernel(pieces):
+    def kernel(_split, pieces):
         import numpy as np
 
         by_block: dict = {}
-        for b, i0, rows in pieces:
-            by_block.setdefault(b, []).append((i0, rows))
+        for b, piece in pieces:
+            by_block.setdefault(b, []).append(block_rows(b, piece))
         for b, parts in by_block.items():
             parts.sort(key=lambda part: part[0])
             i0 = parts[0][0]
@@ -277,7 +308,7 @@ def _chunk_kernel(n: int, omega: float, k: int, rows_per_block: int, maxima):
             own_lo = b * rows_per_block
             own_hi = min(n, own_lo + rows_per_block)
             maxima.add(tuple(_run_local_sweeps(arr, i0, n, omega, k, own_lo, own_hi)))
-            yield b, own_lo, arr[own_lo - i0 : own_hi - i0]
+            yield b, (own_lo, arr[own_lo - i0 : own_hi - i0])
 
     return kernel
 
@@ -299,10 +330,15 @@ def solve_blocked(
 
     Jobs: one per chunk — one stage of one task with one block, else
     the halo shuffle's map stage and ``nb`` result tasks — and one more
-    for a mid-chunk convergence redo. The initial grid and the result
-    DataFrame run none. With reliable checkpoints, each of these jobs
-    is followed by the one that writes its checkpoint files. The final
-    grid is in block storage when this returns.
+    for a mid-chunk convergence redo. Each task of a round runs one
+    Python function, the first round's included: the kernel makes the
+    initial blocks itself, and reads the halo shuffle's output as it
+    comes. The initial grid and the result DataFrame run no job. With
+    reliable checkpoints, each of these jobs is followed by the one
+    that writes its checkpoint files. The kernel is pickled and wrapped
+    for the JVM once per distinct chunk size in a solve (the chunk size
+    and, usually, the redo's), not once per round. The final grid is in
+    block storage when this returns.
     """
     if n < 2:
         raise ValueError("numPointsPerDimension must be >= 2 (laplace-seq.c:155-161)")
@@ -315,26 +351,58 @@ def solve_blocked(
         num_blocks = max(1, min(sc.defaultParallelism, n // max(1, 4 * k0)))
     rows_per_block = -(-n // num_blocks)  # ceil
     nb = -(-n // rows_per_block)  # effective block count
+    # The kernel reads parallelize's slices, partitionBy's output or its
+    # own earlier output, and all three are batches pickled with the
+    # context's serializer, so one serializer reads and writes them all.
+    stream = AutoBatchedSerializer(sc._unbatched_serializer)
+    kernels: dict[int, tuple] = {}  # k -> (JVM PythonFunction, its maxima accumulator)
+    python_rdd = sc._jvm.PythonRDD  # each py4j class lookup is a round trip
 
     def run_chunk(grid: RDD, k: int) -> tuple[RDD, tuple]:
         """One round: ``k`` sweeps from ``grid`` in one job; the cut
-        new grid and the per-sweep global maxima."""
-        maxima = sc.accumulator((float("-inf"),) * k, ElementwiseMax())
+        new grid and the per-sweep global maxima.
+
+        A round redoes none of the solve's fixed work. The kernel is
+        pickled into a JVM ``PythonFunction`` once per ``k``
+        (``pyspark.core.rdd._wrap_function``, which ``PipelinedRDD``
+        calls for its own), and each round puts a ``PythonRDD`` over it
+        and the previous round's cut. The action is
+        ``countAsync().get()``: its job runs Spark's closure cleaner
+        once, on a closure of the small ``AsyncRDDActions`` class, where
+        ``count()`` runs it twice and re-parses the large ``RDD`` and
+        ``SparkContext`` classes each time. Such a job does not
+        checkpoint its RDD, so the round calls ``RDD.doCheckpoint()``
+        itself, as ``runJob`` would: that truncates a local
+        checkpoint's lineage, and with reliable checkpoints runs the job
+        that writes the files. The other Spark-internal handles are
+        ``_jsc``'s: the call site here and ``unpersistRDD`` in
+        ``release_cut``. The output is a plain ``RDD``, so a ``map`` on
+        it starts a new Python pass over the cut instead of pipelining
+        the kernel."""
+        if k not in kernels:
+            maxima = sc.accumulator((float("-inf"),) * k, ElementwiseMax())
+            kernel = _chunk_kernel(n, omega, k, rows_per_block, maxima)
+            kernels[k] = _wrap_function(sc, kernel, stream, stream), maxima
+        jfunc, maxima = kernels[k]
+        # reset for this round: a late task of an earlier round cannot
+        # add to it, as the scheduler drops the results of a stage that is gone
+        maxima.value = (float("-inf"),) * k
         if nb > 1:
-            grid = grid.flatMap(_halo_slices(rows_per_block, nb, k))
-            grid = grid.partitionBy(nb, lambda b: b).values()
-        out = grid.mapPartitions(_chunk_kernel(n, omega, k, rows_per_block, maxima))
+            grid = grid.flatMap(_halo_slices(n, rows_per_block, nb, k))
+            grid = grid.partitionBy(nb, lambda t: t)
+        jrdd = python_rdd(grid._jrdd.rdd(), jfunc, False, False)
+        out = RDD(jrdd.asJavaRDD(), sc, stream)
         cut_rdd(out)
-        # a JVM-side action: no Python pass of its own; named here, as
-        # py4j calls otherwise get an arbitrary call site
+        # named here, as py4j calls otherwise get an arbitrary call site
         sc._jsc.setCallSite("count at laplace_blocked.py:run_chunk")
         try:
-            out._jrdd.count()
+            out._jrdd.countAsync().get()
+            jrdd.doCheckpoint()
         finally:
             sc._jsc.setCallSite(None)
-        return RDD(out._jrdd, sc, out._jrdd_deserializer), maxima.value
+        return out, maxima.value
 
-    grid = sc.parallelize(range(nb), nb).map(_init_block(n, rows_per_block))
+    grid = sc.parallelize([(b, None) for b in range(nb)], nb)  # see _block_rows
     cut = False  # whether grid is a cut this solve made (and must free)
     num_iterations = 0
     final_diff = float("inf")
@@ -371,7 +439,7 @@ def solve_blocked(
     duration = time.monotonic() - t0
 
     def grid_rows(block):
-        _, i0, rows = block
+        _, (i0, rows) = block
         return ((i0 + r, row.tolist()) for r, row in enumerate(rows))
 
     grid_df = spark.createDataFrame(

@@ -14,9 +14,11 @@ test N the sizing heuristic would otherwise collapse to one block.
 from __future__ import annotations
 
 import pytest
+from pyspark import cloudpickle
+from pyspark.core import rdd as core_rdd
 from pyspark.sql import functions as F
 
-from pwir_zadanie_4_mapreduce_spark import laplace
+from pwir_zadanie_4_mapreduce_spark import laplace, laplace_blocked
 from pwir_zadanie_4_mapreduce_spark.laplace_blocked import solve_blocked
 from pwir_zadanie_4_mapreduce_spark.session import pinned_rdds
 
@@ -130,6 +132,67 @@ print(r.num_iterations, f"{r.final_diff:.10f}")
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert tuple(proc.stdout.split()) == (str(GOLDEN_STATS[16][0]), GOLDEN_STATS[16][1])
     assert "locally checkpointed" not in proc.stderr
+    # every round reuses one accumulator per chunk size
+    assert "Failed to update accumulator" not in proc.stderr
+    assert "non-existent accumulator" not in proc.stderr
+
+
+def _record_kernel_wraps(monkeypatch) -> list:
+    """Record, for the rest of the test, every Python function pickled
+    into a JVM ``PythonFunction`` whose pickle carries the sweep kernel
+    (shuffle-keying and result-DataFrame functions do not)."""
+    real = core_rdd._wrap_function
+    wraps = []
+
+    def recording(sc, func, *args, **kwargs):
+        if b"run_local_sweeps" in cloudpickle.dumps(func):
+            wraps.append(func)
+        return real(sc, func, *args, **kwargs)
+
+    monkeypatch.setattr(core_rdd, "_wrap_function", recording)
+    monkeypatch.setattr(laplace_blocked, "_wrap_function", recording, raising=False)
+    return wraps
+
+
+@pytest.mark.parametrize("num_blocks", [1, 3])
+def test_kernel_wrapped_once_per_chunk_size(spark, monkeypatch, num_blocks):
+    """The kernel is pickled once per distinct chunk size in a solve,
+    not once per round: N=16 at k=8 runs 17 chunks, the last converging
+    mid-way, and a redo of 4 sweeps, so two chunk sizes."""
+    wraps = _record_kernel_wraps(monkeypatch)
+    r = solve_blocked(spark, 16, num_blocks=num_blocks, sweeps_per_job=8)
+    assert r.num_iterations == 132
+    assert 1 <= len(wraps) <= 2, len(wraps)
+
+
+def _lineage_depth(jrdd) -> int:
+    """The longest dependency chain from the JVM RDD ``jrdd``, itself
+    included."""
+    deps = jrdd.dependencies()
+    return 1 + max((_lineage_depth(deps.apply(i).rdd()) for i in range(deps.size())), default=0)
+
+
+@pytest.mark.parametrize("reliable", [False, True], ids=["local", "reliable"])
+def test_final_grid_lineage_is_cut(spark, monkeypatch, reliable):
+    """A round's job does not checkpoint its RDD by itself; the round
+    does. After a solve the final grid is checkpointed, in both
+    checkpoint modes, and its lineage is as deep for k=8 (18 rounds)
+    as for k=2 (66 rounds)."""
+    if reliable:
+        monkeypatch.setenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", "1")
+    else:
+        monkeypatch.delenv("SPARK_GRAFT_RELIABLE_CHECKPOINT", raising=False)
+    sc = spark.sparkContext
+    depths = []
+    for k in (8, 2):
+        before = pinned_rdds(spark)
+        r = solve_blocked(spark, 16, num_blocks=1, sweeps_per_job=k)
+        assert r.num_iterations == 132
+        (rdd_id,) = pinned_rdds(spark) - before
+        grid = sc._jsc.getPersistentRDDs().get(rdd_id).rdd()
+        assert grid.isCheckpointed(), k
+        depths.append(_lineage_depth(grid))
+    assert depths[0] == depths[1], depths
 
 
 def test_max_iterations_cap(spark):
@@ -207,6 +270,47 @@ def _assert_rounds_read_cuts(spark, group: str) -> None:
     assert records[0] == 0 and all(r > 0 for r in records[1:]), records
 
 
+def _python_passes(spark, stage_id: int) -> int:
+    """The Python functions a task of the stage runs, read from the
+    stage's RDD graph in the status store: its ``PythonRDD``s, less
+    the cut of an earlier round it reads (a ``PythonRDD`` whose parent
+    is now a checkpoint RDD)."""
+    graph = spark.sparkContext._jsc.sc().statusStore().operationGraphForStage(stage_id)
+    names: dict[int, str] = {}
+
+    def walk(cluster):
+        nodes, clusters = cluster.childNodes(), cluster.childClusters()
+        for i in range(nodes.size()):
+            names[nodes.apply(i).id()] = nodes.apply(i).name()
+        for i in range(clusters.size()):
+            walk(clusters.apply(i))
+
+    walk(graph.rootCluster())
+    parents: dict[int, list[str]] = {}
+    edges = graph.edges()
+    for i in range(edges.size()):
+        edge = edges.apply(i)
+        parents.setdefault(edge.toId(), []).append(names.get(edge.fromId(), ""))
+    return sum(
+        name == "PythonRDD"
+        and not any(p.endswith("CheckpointRDD") for p in parents.get(rdd_id, []))
+        for rdd_id, name in names.items()
+    )
+
+
+def _assert_one_python_pass(spark, group: str) -> None:
+    """Every stage of every round of ``group`` runs exactly one Python
+    function per task: the first round's kernel makes the initial
+    blocks itself, and the kernel reads the halo shuffle's output
+    directly, without a map pass of its own in front."""
+    tracker = spark.sparkContext.statusTracker()
+    passes = [
+        [_python_passes(spark, s) for s in sorted(tracker.getJobInfo(job_id).stageIds)]
+        for job_id in sorted(tracker.getJobIdsForGroup(group))
+    ]
+    assert all(set(job) == {1} for job in passes), passes
+
+
 def test_one_block_job_and_task_budget(spark, monkeypatch):
     """One block (the default sizing below N=256 at k=32): each chunk
     is ONE job of one stage of one task — the narrow kernel pass, whose
@@ -221,6 +325,7 @@ def test_one_block_job_and_task_budget(spark, monkeypatch):
     assert all(name.startswith("count at ") for name, _ in jobs), jobs
     assert all([tasks for _, tasks in stages] == [1] for _, stages in jobs), jobs
     _assert_rounds_read_cuts(spark, "laplace-budget-1")
+    _assert_one_python_pass(spark, "laplace-budget-1")
 
 
 def test_multi_block_one_task_per_block(spark, monkeypatch):
@@ -243,6 +348,7 @@ def test_multi_block_one_task_per_block(spark, monkeypatch):
             [tasks for _, tasks in stages] == [num_blocks, num_blocks] for _, stages in jobs
         ), jobs
         _assert_rounds_read_cuts(spark, group)
+        _assert_one_python_pass(spark, group)
         # block b's owned rows come out of partition b
         rows_per_block = -(-n // num_blocks)
         placed = r.grid.select(F.spark_partition_id().alias("p"), "i").distinct().collect()

@@ -9,9 +9,13 @@ Runs ``laplace_blocked.solve_blocked``; ``--blocks`` overrides its
 block-count heuristic (the BASELINE.md rows at N >= 1024 used explicit
 counts). Prints the reference-format stats line plus job/chunk
 accounting — the chunk estimate next to the solve's job count read
-from Spark's status tracker and the median job duration read from its
-status store — so the Spark-vs-C ratio in BASELINE.md is a measured
-number, not an argument.
+from Spark's status tracker, and from its status store the median job
+duration (``job_p50_s``) and the median interval between consecutive
+job completions (``round_p50_s``, what perfbench's solver
+``query_p50_s`` measures: a round's whole cost, the driver's work and
+the closure cleaning before each job's submission included) — so the
+Spark-vs-C ratio in BASELINE.md is a measured number, not an
+argument.
 """
 from __future__ import annotations
 
@@ -51,16 +55,20 @@ def main() -> None:
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     job_ids = sc.statusTracker().getJobIdsForGroup("laplace-perf")
     store = sc._jsc.sc().statusStore()
-    job_s = []
+    job_s, ends_ms = [], []
     for job_id in job_ids:
         job = store.job(job_id)
-        ms = job.completionTime().get().getTime() - job.submissionTime().get().getTime()
-        job_s.append(ms / 1e3)
+        end_ms = job.completionTime().get().getTime()
+        job_s.append((end_ms - job.submissionTime().get().getTime()) / 1e3)
+        ends_ms.append(end_ms)
+    ends_ms.sort()
+    round_s = [(b - a) / 1e3 for a, b in zip(ends_ms, ends_ms[1:])]
     laplace.print_stats(res, file=sys.stdout)
     print(
         f"config: N={n} sweeps_per_job={sweeps} cpus={cpus or DEFAULT_CPUS} "
         f"chunks~={(res.num_iterations + sweeps - 1) // sweeps} jobs={len(job_s)} "
         f"job_p50_s={statistics.median(job_s) if job_s else 0.0:.4f} "
+        f"round_p50_s={statistics.median(round_s) if round_s else 0.0:.4f} "
         f"s_per_iter={res.duration_s / max(1, res.num_iterations):.4f}"
     )
     spark.stop()
